@@ -1,21 +1,29 @@
 """BM25 top-k search over the segmented postings table.
 
 Spark-first re-expression of the reference's term-at-a-time search
-(/root/reference/atire/atire_api.c:843-879, source/search_engine.c:763-1126):
+(reference atire/atire_api.c:843-879, source/search_engine.c:763-1126):
 
 reference                                   → this engine
 ------------------------------------------- ----------------------------
-dictionary B-tree lookup per term            postings.join(query terms)
-(search_engine.c:403-518)                    → parquet/Iceberg file prune
-read + partial decompress postings           vectorized vbyte decode in
-(search_engine.c:845-1084)                   mapInPandas, per segment
+dictionary B-tree lookup per term            postings.filter(term isin
+(search_engine.c:403-518)                    query terms) → parquet/Iceberg
+                                             file prune
+read + partial decompress postings           vectorized vbyte decode per
+(search_engine.c:845-1084)                   segment in _grouped_topk
 per-impact-group score computed once,        group_contrib kernel per
 add_rsv per docid                            (segment, impact group)
 (ranking_function_bm25.c:111-128)
-uint16 fixed-point accumulator array         groupBy(query_id, docid)
-(search_engine_accumulator.h:76)             .sum(contrib) % 65536
-top-k heap + partial sort, tie larger        row_number() over rsv desc,
-docid first (search_engine_accumulator.h)    docid desc → rank <= k
+uint16 fixed-point accumulator array         numpy groupby(query_id,
+(search_engine_accumulator.h:76)             docid).sum(contrib) % 65536
+top-k heap + partial sort, tie larger        exact per-query top-k, rsv
+docid first (search_engine_accumulator.h)    desc, docid desc → rank <= k
+
+The grouped scorer runs in one of two placements (see
+SearchEngine._search_grouped). A batch whose scan can hold at most
+COLLECT_MAX_POSTINGS postings is collected in one JVM-only Spark job
+and scored and ranked in the driver — the reference's in-RAM search.
+Larger batches run distributed: mapInPandas over seg_group partitions,
+then a row_number() window keeps rank <= k.
 
 Segments are self-contained (global df on the row, doc lengths inline),
 so scoring is embarrassingly parallel: no docmap join, no broadcast of
@@ -25,12 +33,14 @@ deployment.
 
 from __future__ import annotations
 
+import functools
 import re
 from collections import Counter
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -48,6 +58,49 @@ from atire_spark.kernels.tokenizer import tokenize
 from atire_spark.kernels.vbyte import vbyte_decode
 
 RESULT_SCHEMA = "query_id long, rank int, docid long, rsv_fixed long, rsv double"
+# RESULT_SCHEMA as Arrow, for driver-local result frames
+_RESULT_ARROW = pa.schema(
+    [
+        ("query_id", pa.int64()),
+        ("rank", pa.int32()),
+        ("docid", pa.int64()),
+        ("rsv_fixed", pa.int64()),
+        ("rsv", pa.float64()),
+    ]
+)
+
+# Collected placement of search_batch's grouped scorer: a batch whose
+# pushed-filter postings scan can hold at most this many postings
+# (Σ df over its distinct terms ≤ terms × N) is collected to the driver
+# in one job and scored there. 2^20 postings are a few MB of segment
+# bytes and tens of MB decoded; a serving shard's 5-term query is far
+# below it.
+COLLECT_MAX_POSTINGS = 1 << 20
+
+
+def _local_result(spark: SparkSession, ranked: pd.DataFrame | None = None) -> DataFrame:
+    """A RESULT_SCHEMA frame held on the driver (``None`` → empty).
+    Built from an Arrow table, so it plans as a LocalTableScan and
+    collects without a Spark job; a Python list or an empty pandas
+    frame would go through ``parallelize`` and cost one."""
+    if ranked is None:
+        return spark.createDataFrame(_RESULT_ARROW.empty_table())
+    return spark.createDataFrame(
+        pa.Table.from_pandas(ranked, schema=_RESULT_ARROW, preserve_index=False)
+    )
+
+
+def _rank_local(cand: pd.DataFrame, k: int) -> pd.DataFrame:
+    """:meth:`SearchEngine._rank_topk` on a driver-side candidate frame:
+    rsv_fixed desc, tie larger-docid-first, rank <= k, ordered by
+    (query_id, rank)."""
+    out = cand.sort_values(
+        ["query_id", "rsv_fixed", "docid"], ascending=[True, False, False]
+    )
+    out = out.assign(
+        rank=out.groupby("query_id").cumcount() + 1, rsv=out["rsv_fixed"] / 100.0
+    )
+    return out[out["rank"] <= k][_RESULT_ARROW.names]
 
 
 LMD_U = 6750.0  # ranking_function_lmd.h:10
@@ -852,6 +905,176 @@ def parse_query(
     return list(Counter(query_stem(t, stemmer) for t in terms).items())
 
 
+def _grouped_topk(
+    batches: Iterator[pd.DataFrame],
+    *,
+    qmap: dict[str, list[tuple[int, int, float]]],
+    nq: dict[int, float],
+    n_terms_per_q: dict[int, int],
+    k: int,
+    ranker: str,
+    conjunctive: bool,
+    trim_for: dict[tuple[int, str], int] | None,
+    term_aux: dict | None,
+    n_docs: int,
+    mean_len: float,
+    coll_len: int,
+    quantized: bool,
+    codec: str,
+) -> Iterator[pd.DataFrame]:
+    """The grouped BM25 scorer over matched segment rows → per-query
+    top-k candidates (query_id, docid, rsv_fixed).
+
+    Exact for every docid whose matched segments all arrive in
+    ``batches``: a task of the distributed placement (rows co-located
+    on seg_group) or the driver of the collected placement (every
+    matched row). See :meth:`SearchEngine._search_grouped`.
+    """
+    qids: list[np.ndarray] = []
+    docs: list[np.ndarray] = []
+    contribs: list[np.ndarray] = []
+    hit_flags: list[np.ndarray] = []
+    nzs: list[np.ndarray] = []  # per-occurrence nonzero flags
+    nz_rest: list[np.ndarray] = []  # lmds: flags if NOT first
+    units: list[np.ndarray] = []  # lmds: is_zero_rsv rework
+    unit_ps: list[np.ndarray] = []
+    weights_: list[np.ndarray] = []
+    lmds = ranker == "lmds"
+    adjs: list[np.ndarray] = []  # lmds first-hit prior adjustment
+    cfs: list[np.ndarray] = []  # lmds term order: cf asc, term asc
+    terms_: list[np.ndarray] = []
+    for pdf in batches:
+        for row in pdf.itertuples(index=False):
+            # one decode per distinct trim value of this segment
+            # (None = full decode); trims are rare
+            decs: dict[int | None, object] = {}
+            for qid, weight, post in qmap[row.term]:
+                tr = trim_for.get((qid, row.term)) if trim_for else None
+                if tr not in decs:
+                    if tr is not None:
+                        # take to the trim point: cum_before is the
+                        # term-global read position at this quantum
+                        # (see SearchEngine._with_trim_cum)
+                        cnt = np.asarray(row.doc_counts, dtype=np.int64)
+                        before = np.asarray(row.cum_before, dtype=np.int64)
+                        tk = np.minimum(cnt, np.maximum(tr - before, 0))
+                    else:
+                        tk = None
+                    decs[tr] = _segment_contrib(
+                        row, ranker, conjunctive, quantized,
+                        n_docs, mean_len, coll_len,
+                        take_counts=tk, term_aux=term_aux,
+                        codec=codec,
+                    )
+                dec = decs[tr]
+                if dec is None:
+                    continue
+                if lmds:
+                    _, docids, rsv, prior, cf = dec
+                    unit = 1 + ((rsv * post) * 100.0).astype(np.int64)
+                    rsv_p = (rsv + nq[qid] * prior)
+                    unit_p = 1 + ((rsv_p * post) * 100.0).astype(np.int64)
+                    # weight-fold: the first OCCURRENCE carries the
+                    # prior, the remaining w-1 add plain rsv; contrib
+                    # assumes this row is the doc's first term, adj
+                    # undoes that if it isn't
+                    contribs.append(unit_p + (weight - 1) * unit)
+                    adjs.append(unit - unit_p)
+                    cfs.append(np.full(docids.size, cf, np.int64))
+                    terms_.append(np.full(docids.size, row.term, dtype=object))
+                    # candidate-entry rule per OCCURRENCE, resolved
+                    # after the first-term sort: the FIRST term's
+                    # occurrences are (unit_p, unit×(w−1)), later
+                    # terms' are (unit×w)
+                    nzs.append(
+                        ((unit_p != 0) | ((weight > 1) & (unit != 0))).astype(
+                            np.int64
+                        )
+                    )
+                    nz_rest.append((unit != 0).astype(np.int64))
+                    units.append(unit)
+                    unit_ps.append(unit_p)
+                    weights_.append(np.full(docids.size, weight, np.int64))
+                else:
+                    docids, contrib = _per_query_contrib(dec, nq[qid], post)
+                    # add_rsv transitions a doc into the candidate list
+                    # only when the contribution is nonzero
+                    # (search_engine_result.h) — per-occurrence, so
+                    # test before the fold
+                    nzs.append((contrib != 0).astype(np.int64))
+                    if ranker in ("docid_asc", "docid_desc"):
+                        # set_rsv semantics: positional value, no
+                        # query-weight multiplication
+                        contribs.append(contrib)
+                    else:
+                        contribs.append(contrib * weight)
+                qids.append(np.full(docids.size, qid, dtype=np.int64))
+                docs.append(docids)
+                hit_flags.append(np.ones(docids.size, dtype=np.int64))
+    if not qids:
+        return
+    acc = pd.DataFrame(
+        {
+            "query_id": np.concatenate(qids),
+            "docid": np.concatenate(docs),
+            "contrib": np.concatenate(contribs),
+            "hit": np.concatenate(hit_flags),
+            "nz": np.concatenate(nzs),
+        }
+    )
+    if lmds:
+        # every row's contrib includes the doc prior; all but the first
+        # term (cf asc, term asc — the reference's ascending-cf
+        # processing order, atire_api.c:961-968) must take it back out
+        # via adj
+        acc["adj"] = np.concatenate(adjs)
+        acc["cf"] = np.concatenate(cfs)
+        acc["term"] = np.concatenate(terms_)
+        acc["nz_rest"] = np.concatenate(nz_rest)
+        acc["unit"] = np.concatenate(units)
+        acc["unit_p"] = np.concatenate(unit_ps)
+        acc["weight"] = np.concatenate(weights_)
+        acc = acc.sort_values(
+            ["query_id", "docid", "cf", "term"], kind="stable"
+        ).reset_index(drop=True)
+        first = acc.groupby(["query_id", "docid"], sort=False).cumcount().eq(0)
+        acc.loc[first, "adj"] = 0
+        acc["contrib"] = acc["contrib"] + acc["adj"]
+        # only the first term's occurrences include the prior
+        acc.loc[~first, "nz"] = acc.loc[~first, "nz_rest"]
+        # exact is_zero_rsv replay for groups the fold cannot represent
+        # (zero contributions / zero-wrapped prefixes)
+        _zero_rsv_rework(acc, first.to_numpy())
+    # docid rankers use the reference's set_rsv (overwrite) semantics:
+    # identical per-term values, MAX == the value
+    contrib_agg = "max" if ranker in ("docid_asc", "docid_desc") else "sum"
+    agg = (
+        acc.groupby(["query_id", "docid"], sort=False)
+        .agg(
+            rsv_fixed=("contrib", contrib_agg),
+            th=("hit", "sum"),
+            nz=("nz", "max"),
+        )
+        .reset_index()
+    )
+    agg["rsv_fixed"] = accum_value(agg["rsv_fixed"])
+    if conjunctive:
+        need = agg["query_id"].map(n_terms_per_q)
+        agg = agg[agg["th"] >= need]
+    else:
+        # a doc whose every contribution truncated to zero never
+        # transitioned 0→nonzero: not a candidate
+        agg = agg[agg["nz"] > 0]
+    outs = []
+    for _, g in agg.groupby("query_id", sort=False):
+        if len(g) > k:
+            order = np.lexsort((-g["docid"].to_numpy(), -g["rsv_fixed"].to_numpy()))
+            g = g.iloc[order[:k]]
+        outs.append(g[["query_id", "docid", "rsv_fixed"]])
+    if outs:
+        yield pd.concat(outs)
+
+
 class SearchEngine:
     def __init__(
         self,
@@ -983,13 +1206,33 @@ class SearchEngine:
         )
         return hits.join(cum_df, ["term", "seg_group"])
 
+    def check_ranker(self, ranker: str) -> None:
+        """Raise ValueError when ``ranker`` cannot run on this index —
+        the checks :meth:`search_batch` makes before planning anything,
+        so a caller can validate a ranker name without a Spark job."""
+        if ranker not in KNOWN_RANKERS:
+            # the reference factory rejects unknown names
+            # (ranking_function_factory.c:121-160 falls through to an
+            # error); falling back to BM25 silently would be worse
+            raise ValueError(f"unknown ranking function {ranker!r}")
+        if self.quantized and ranker != "bm25":
+            raise ValueError(
+                "cannot set ranking function: the index is quantized "
+                "(atire_api.c:477)"
+            )
+        if ranker in ("lmp", "lmptfidf") and self.index.puurula is None:
+            raise ValueError(
+                "This index does not contain the Puurula length "
+                "vectors, reindex using -Ilmp "
+                "(ranking_function_puurula.c:39-41)"
+            )
+
     def search_batch(
         self,
         queries: list[tuple[int, str]],
         k: int = 10,
         ranker: str = "bm25",
         conjunctive: bool = False,
-        grouped: bool = True,
         parsed_terms: dict[int, list[tuple[str, int, float]]] | None = None,
         trim_postings_k: int | None = None,
         single_term_prune: bool = False,
@@ -1026,12 +1269,13 @@ class SearchEngine:
         (documents past the trim point get no score); the reference
         applies the single-term prune unconditionally — here it is
         opt-in so the default path stays exact-evaluation.
+
+        A batch whose postings scan is small enough is scored in the
+        driver and comes back as a driver-local frame (one Spark job,
+        run here); larger batches return a lazy distributed plan — see
+        :meth:`_search_grouped`. A batch with no terms costs no job.
         """
-        if ranker not in KNOWN_RANKERS:
-            # the reference factory rejects unknown names
-            # (ranking_function_factory.c:121-160 falls through to an
-            # error); falling back to BM25 silently would be worse
-            raise ValueError(f"unknown ranking function {ranker!r}")
+        self.check_ranker(ranker)
         if (
             self.stemmer is not None
             and parsed_terms is None
@@ -1055,31 +1299,12 @@ class SearchEngine:
             return self.search_stemmed_iterator(
                 queries, stemmer=self.stemmer, k=k
             )
-        if self.quantized and ranker != "bm25":
-            raise ValueError(
-                "cannot set ranking function: the index is quantized "
-                "(atire_api.c:477)"
-            )
-        if ranker == "lmds" and not grouped:
-            raise ValueError("lmds requires the grouped (default) path")
-        if ranker in ("lmp", "lmptfidf"):
-            if self.index.puurula is None:
-                raise ValueError(
-                    "This index does not contain the Puurula length "
-                    "vectors, reindex using -Ilmp "
-                    "(ranking_function_puurula.c:39-41)"
-                )
-            if (
-                not grouped
-                or conjunctive
-                or trim_postings_k is not None
-                or single_term_prune
-            ):
-                # the reference likewise exits on unsupported lmp
-                # combinations (e.g. quantum processing, puurula.c:62)
-                raise ValueError(
-                    "lmp/lmptfidf support only the plain grouped path"
-                )
+        if ranker in ("lmp", "lmptfidf") and (
+            conjunctive or trim_postings_k is not None or single_term_prune
+        ):
+            # the reference likewise exits on unsupported lmp
+            # combinations (e.g. quantum processing, puurula.c:62)
+            raise ValueError("lmp/lmptfidf support only plain ranked search")
         # query plan: the term set is a pushed-down isin filter on the
         # postings scan — no per-query DataFrame, no broadcast
         # exchange; each matched segment is decoded once and fans out
@@ -1101,7 +1326,7 @@ class SearchEngine:
             for term, weight, post in parsed:
                 qmap.setdefault(term, []).append((qid, weight, post))
         if not qmap:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return _local_result(self.spark)
 
         hits = self.postings.filter(F.col("term").isin(list(qmap)))
 
@@ -1122,17 +1347,7 @@ class SearchEngine:
                 for term, _w, _p in plist:
                     trim_for[(qid, term)] = eff
         if trim_for:
-            if not grouped:
-                raise ValueError(
-                    "read-side trims require the grouped (default) path"
-                )
             hits = self._with_trim_cum(hits)
-
-        n_docs = self.n_docs
-        mean_len = self.mean_doc_len
-        coll_len = self.collection_len
-        quantized = self.quantized
-        codec = self.codec
 
         term_aux: dict | None = None
         if ranker in ("bm25t", "bm25adpt"):
@@ -1141,79 +1356,15 @@ class SearchEngine:
         if ranker in ("lmp", "lmptfidf"):
             return self._search_puurula(hits, qmap, nq, k, ranker)
 
-        if grouped:
-            return self._search_grouped(
-                hits, qmap, nq, n_terms_per_q, k, ranker, conjunctive,
-                trim_for, term_aux,
-            )
+        return self._search_grouped(
+            hits, qmap, nq, n_terms_per_q, k, ranker, conjunctive,
+            trim_for, term_aux,
+        )
 
-        def score_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                out_qid: list[np.ndarray] = []
-                out_doc: list[np.ndarray] = []
-                out_contrib: list[np.ndarray] = []
-                out_hits: list[np.ndarray] = []
-                out_nz: list[np.ndarray] = []
-                for row in pdf.itertuples(index=False):
-                    dec = _segment_contrib(
-                        row, ranker, conjunctive, quantized, n_docs, mean_len,
-                        coll_len, term_aux=term_aux, codec=codec,
-                    )
-                    if dec is None:
-                        continue  # df == N contributes nothing (bm25.c:91-92)
-                    for qid, weight, post in qmap[row.term]:
-                        docids, contrib = _per_query_contrib(dec, nq[qid], post)
-                        out_qid.append(np.full(docids.size, qid, dtype=np.int64))
-                        out_doc.append(docids)
-                        out_nz.append((contrib != 0).astype(np.int64))
-                        out_contrib.append(contrib * weight)
-                        out_hits.append(np.ones(docids.size, dtype=np.int64))
-                if out_qid:
-                    yield pd.DataFrame(
-                        {
-                            "query_id": np.concatenate(out_qid),
-                            "docid": np.concatenate(out_doc),
-                            "contrib": np.concatenate(out_contrib),
-                            "term_hits": np.concatenate(out_hits),
-                            "nz": np.concatenate(out_nz),
-                        }
-                    )
-
-        scored = hits.mapInPandas(
-            score_fn,
-            schema="query_id long, docid long, contrib long, term_hits long,"
-            " nz long",
-        )
-        contrib_agg = (
-            F.max("contrib")
-            if ranker in ("docid_asc", "docid_desc")
-            else F.sum("contrib")
-        )
-        accum = scored.groupBy("query_id", "docid").agg(
-            # signed 16-bit accumulator value (LM scores can go
-            # negative; the reference's short accumulator orders them
-            # below zero, GNUmakefile.defns:94)
-            accum_value_col(contrib_agg).alias("rsv_fixed"),
-            F.sum("term_hits").alias("term_hits"),
-            F.max("nz").alias("nz"),
-        )
-        if not conjunctive:
-            # candidate-entry rule: some contribution must be nonzero
-            accum = accum.filter(F.col("nz") > 0)
-        if conjunctive:
-            # allterms: drop docs matching fewer than all distinct terms
-            # (search_engine.c:1491-1511). A distinct term yields at most
-            # one posting row per doc per segment-union, so term_hits ==
-            # number of distinct query terms present.
-            req = self.spark.createDataFrame(
-                [(qid, n) for qid, n in n_terms_per_q.items()],
-                "query_id long, n_terms long",
-            )
-            accum = accum.join(F.broadcast(req), "query_id").filter(
-                F.col("term_hits") >= F.col("n_terms")
-            )
-        accum = accum.select("query_id", "docid", "rsv_fixed")
-        return self._rank_topk(accum, k)
+    def _collected(self, results: DataFrame) -> DataFrame:
+        """Materialize a result frame on the driver, so the cached
+        frames it reads can be released before it is returned."""
+        return self.spark.createDataFrame(results.toArrow())
 
     # ------------------------------------------------------------------
     def _rank_topk(self, accum: DataFrame, k: int) -> DataFrame:
@@ -1270,7 +1421,7 @@ class SearchEngine:
             for term, _w in parse_query(text, self.stemmer, self.cjk_segmenter):
                 qmap.setdefault(term, []).append(qid)
         if not qmap:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return _local_result(self.spark)
         hits = self.postings.filter(F.col("term").isin(list(qmap)))
 
         def cand_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1773,199 +1924,45 @@ class SearchEngine:
         trim_for: dict[tuple[int, str], int] | None = None,
         term_aux: dict | None = None,
     ) -> DataFrame:
-        """Scale path (default): partition by seg_group so every docid's
-        full accumulation completes inside one task, emit only the
-        per-partition top-k candidates per query.
+        """The grouped scorer (:func:`_grouped_topk`) in one of two
+        placements, chosen without a Spark job:
 
-        Segments of *all* terms for a given docid share its seg_group
-        (the group is a pure function of the docid block), so a hash
-        repartition on seg_group co-locates everything a docid needs —
-        the reference's accumulator array sliced into disjoint docid
-        ranges, one per task. Shuffle volume is the handful of matching
-        compressed segments + k·queries candidate rows per partition,
-        never one row per posting (the exploded fallback path does that
-        and is kept for plan comparison, grouped=False).
+        - **Collected** — the batch's pushed-filter scan can hold at
+          most :data:`COLLECT_MAX_POSTINGS` postings (Σ df over the
+          distinct terms ≤ terms × N bounds its rows and bytes). The
+          scan is collected as Arrow in one JVM-only job and scored in
+          the driver process, where the scorer sees every matched row
+          and so emits the exact top-k; the ranked result comes back
+          as a driver-local frame. This is the reference's in-RAM
+          term-at-a-time search (``-M``) for serving-sized shards, and
+          it costs neither a Python worker nor a shuffle.
+        - **Distributed** — above the cap (or with read-side trims,
+          whose per-term prefix sums run distributed, see
+          :meth:`_with_trim_cum`): partition by seg_group so every
+          docid's full accumulation completes inside one task, emit
+          only the per-partition top-k candidates per query, then rank
+          them with :meth:`_rank_topk`. Segments of *all* terms for a
+          given docid share its seg_group (the group is a pure
+          function of the docid block), so a hash repartition on
+          seg_group co-locates everything a docid needs — the
+          reference's accumulator array sliced into disjoint docid
+          ranges, one per task. Shuffle volume is the handful of
+          matching compressed segments + k·queries candidate rows per
+          partition, never one row per posting.
         """
-        n_docs, mean_len = self.n_docs, self.mean_doc_len
-        coll_len = self.collection_len
-        quantized = self.quantized
-        codec = self.codec
-
-        def part_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            qids: list[np.ndarray] = []
-            docs: list[np.ndarray] = []
-            contribs: list[np.ndarray] = []
-            hit_flags: list[np.ndarray] = []
-            nzs: list[np.ndarray] = []  # per-occurrence nonzero flags
-            nz_rest: list[np.ndarray] = []  # lmds: flags if NOT first
-            units: list[np.ndarray] = []  # lmds: is_zero_rsv rework
-            unit_ps: list[np.ndarray] = []
-            weights_: list[np.ndarray] = []
-            lmds = ranker == "lmds"
-            adjs: list[np.ndarray] = []  # lmds first-hit prior adjustment
-            cfs: list[np.ndarray] = []  # lmds term order: cf asc, term asc
-            terms_: list[np.ndarray] = []
-            for pdf in batches:
-                for row in pdf.itertuples(index=False):
-                    # one decode per distinct trim value of this
-                    # segment (None = full decode); trims are rare
-                    decs: dict[int | None, object] = {}
-                    for qid, weight, post in qmap[row.term]:
-                        tr = (
-                            trim_for.get((qid, row.term))
-                            if trim_for
-                            else None
-                        )
-                        if tr not in decs:
-                            if tr is not None:
-                                # take to the trim point: cum_before is
-                                # the term-global read position at this
-                                # quantum (see _with_trim_cum)
-                                cnt = np.asarray(
-                                    row.doc_counts, dtype=np.int64
-                                )
-                                tk = np.minimum(
-                                    cnt,
-                                    np.maximum(
-                                        tr
-                                        - np.asarray(
-                                            row.cum_before, dtype=np.int64
-                                        ),
-                                        0,
-                                    ),
-                                )
-                            else:
-                                tk = None
-                            decs[tr] = _segment_contrib(
-                                row, ranker, conjunctive, quantized,
-                                n_docs, mean_len, coll_len,
-                                take_counts=tk, term_aux=term_aux,
-                                codec=codec,
-                            )
-                        dec = decs[tr]
-                        if dec is None:
-                            continue
-                        if lmds:
-                            _, docids, rsv, prior, cf = dec
-                            unit = 1 + ((rsv * post) * 100.0).astype(np.int64)
-                            rsv_p = (rsv + nq[qid] * prior)
-                            unit_p = 1 + ((rsv_p * post) * 100.0).astype(np.int64)
-                            # weight-fold: the first OCCURRENCE carries
-                            # the prior, the remaining w-1 add plain rsv
-                            # contrib assumes this row is the doc's
-                            # first term; adj undoes that if it isn't
-                            contribs.append(unit_p + (weight - 1) * unit)
-                            adjs.append(unit - unit_p)
-                            cfs.append(np.full(docids.size, cf, np.int64))
-                            terms_.append(
-                                np.full(docids.size, row.term, dtype=object)
-                            )
-                            # candidate-entry rule per OCCURRENCE:
-                            # resolved after the first-term sort —
-                            # the FIRST term's occurrences are
-                            # (unit_p, unit×(w−1)), later terms' are
-                            # (unit×w)
-                            nzs.append(
-                                (
-                                    (unit_p != 0)
-                                    | ((weight > 1) & (unit != 0))
-                                ).astype(np.int64)
-                            )
-                            nz_rest.append((unit != 0).astype(np.int64))
-                            units.append(unit)
-                            unit_ps.append(unit_p)
-                            weights_.append(
-                                np.full(docids.size, weight, np.int64)
-                            )
-                        else:
-                            docids, contrib = _per_query_contrib(
-                                dec, nq[qid], post
-                            )
-                            # add_rsv transitions a doc into the
-                            # candidate list only when the contribution
-                            # is nonzero (search_engine_result.h) —
-                            # per-occurrence, so test before the fold
-                            nzs.append((contrib != 0).astype(np.int64))
-                            if ranker in ("docid_asc", "docid_desc"):
-                                # set_rsv semantics: positional value,
-                                # no query-weight multiplication
-                                contribs.append(contrib)
-                            else:
-                                contribs.append(contrib * weight)
-                        qids.append(np.full(docids.size, qid, dtype=np.int64))
-                        docs.append(docids)
-                        hit_flags.append(np.ones(docids.size, dtype=np.int64))
-            if not qids:
-                return
-            acc = pd.DataFrame(
-                {
-                    "query_id": np.concatenate(qids),
-                    "docid": np.concatenate(docs),
-                    "contrib": np.concatenate(contribs),
-                    "hit": np.concatenate(hit_flags),
-                    "nz": np.concatenate(nzs),
-                }
+        score = functools.partial(
+            _grouped_topk,
+            qmap=qmap, nq=nq, n_terms_per_q=n_terms_per_q, k=k,
+            ranker=ranker, conjunctive=conjunctive, trim_for=trim_for,
+            term_aux=term_aux, n_docs=self.n_docs,
+            mean_len=self.mean_doc_len, coll_len=self.collection_len,
+            quantized=self.quantized, codec=self.codec,
+        )
+        if not trim_for and len(qmap) * self.n_docs <= COLLECT_MAX_POSTINGS:
+            cand = next(score([hits.toArrow().to_pandas()]), None)
+            return _local_result(
+                self.spark, None if cand is None else _rank_local(cand, k)
             )
-            if lmds:
-                # every row's contrib includes the doc prior; all but
-                # the first term (cf asc, term asc — the reference's
-                # ascending-cf processing order, atire_api.c:961-968)
-                # must take it back out via adj
-                acc["adj"] = np.concatenate(adjs)
-                acc["cf"] = np.concatenate(cfs)
-                acc["term"] = np.concatenate(terms_)
-                acc["nz_rest"] = np.concatenate(nz_rest)
-                acc["unit"] = np.concatenate(units)
-                acc["unit_p"] = np.concatenate(unit_ps)
-                acc["weight"] = np.concatenate(weights_)
-                acc = acc.sort_values(
-                    ["query_id", "docid", "cf", "term"], kind="stable"
-                ).reset_index(drop=True)
-                first = (
-                    acc.groupby(["query_id", "docid"], sort=False)
-                    .cumcount()
-                    .eq(0)
-                )
-                acc.loc[first, "adj"] = 0
-                acc["contrib"] = acc["contrib"] + acc["adj"]
-                # only the first term's occurrences include the prior
-                acc.loc[~first, "nz"] = acc.loc[~first, "nz_rest"]
-                # exact is_zero_rsv replay for groups the fold cannot
-                # represent (zero contributions / zero-wrapped prefixes)
-                _zero_rsv_rework(acc, first.to_numpy())
-            # docid rankers use the reference's set_rsv (overwrite)
-            # semantics: identical per-term values, MAX == the value
-            contrib_agg = (
-                "max" if ranker in ("docid_asc", "docid_desc") else "sum"
-            )
-            agg = (
-                acc.groupby(["query_id", "docid"], sort=False)
-                .agg(
-                    rsv_fixed=("contrib", contrib_agg),
-                    th=("hit", "sum"),
-                    nz=("nz", "max"),
-                )
-                .reset_index()
-            )
-            agg["rsv_fixed"] = accum_value(agg["rsv_fixed"])
-            if conjunctive:
-                need = agg["query_id"].map(n_terms_per_q)
-                agg = agg[agg["th"] >= need]
-            else:
-                # a doc whose every contribution truncated to zero
-                # never transitioned 0→nonzero: not a candidate
-                agg = agg[agg["nz"] > 0]
-            outs = []
-            for _, g in agg.groupby("query_id", sort=False):
-                if len(g) > k:
-                    order = np.lexsort(
-                        (-g["docid"].to_numpy(), -g["rsv_fixed"].to_numpy())
-                    )[:k]
-                    g = g.iloc[order]
-                outs.append(g[["query_id", "docid", "rsv_fixed"]])
-            if outs:
-                yield pd.concat(outs)
-
         # the seg_group repartition co-locates every segment a docid's
         # accumulation needs — but a docid only spans MULTIPLE matched
         # rows when its query has ≥2 distinct terms (the build merges a
@@ -1978,7 +1975,7 @@ class SearchEngine:
         if any(n > 1 for n in n_terms_per_q.values()):
             src = hits.repartition("seg_group")
         cand = src.mapInPandas(
-            part_fn, schema="query_id long, docid long, rsv_fixed long"
+            score, schema="query_id long, docid long, rsv_fixed long"
         )
         return self._rank_topk(cand, k)
 
@@ -2053,7 +2050,7 @@ class SearchEngine:
                     (qid, leaf.idx)
                 )
         if not lmap:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return _local_result(self.spark)
         hits = self.postings.filter(F.col("term").isin(list(lmap)))
         n_docs, mean_len = self.n_docs, self.mean_doc_len
         quantized = self.quantized
@@ -2182,7 +2179,7 @@ class SearchEngine:
             for term, weight in parse_query(text, self.stemmer, self.cjk_segmenter):
                 qmap.setdefault(term, []).append((qid, weight))
         if not qmap:
-            empty = self.spark.createDataFrame([], RESULT_SCHEMA)
+            empty = _local_result(self.spark)
             return (empty, {"processed_quantums": 0, "total_quantums": 0}) if return_stats else empty
         hits = self.postings.filter(F.col("term").isin(list(qmap)))
 
@@ -2366,18 +2363,22 @@ class SearchEngine:
             part_fn,
             schema="query_id long, docid long, rsv_fixed long, pq long, tq long",
         )
-        cand = cand.persist()
         results = self._rank_topk(
             cand.filter(F.col("docid") >= 0).select("query_id", "docid", "rsv_fixed"),
             k,
         )
         if not return_stats:
             return results
-        m = (
-            cand.filter(F.col("docid") < 0)
-            .agg(F.sum("pq").alias("pq"), F.sum("tq").alias("tq"))
-            .collect()[0]
-        )
+        cand.persist()
+        try:
+            m = (
+                cand.filter(F.col("docid") < 0)
+                .agg(F.sum("pq").alias("pq"), F.sum("tq").alias("tq"))
+                .collect()[0]
+            )
+            results = self._collected(results)
+        finally:
+            cand.unpersist()
         stats = {
             "processed_quantums": int(m["pq"] or 0),
             "total_quantums": int(m["tq"] or 0),
@@ -2464,7 +2465,7 @@ class SearchEngine:
             ):
                 qterms.append((qid, term, weight))
         if not qterms:
-            empty = self.spark.createDataFrame([], RESULT_SCHEMA)
+            empty = _local_result(self.spark)
             if return_stats:
                 return empty, {"segments_scored": 0, "segments_total": 0}
             return empty
@@ -2657,9 +2658,11 @@ class SearchEngine:
         cand = hits.repartition("seg_group").mapInPandas(
             part_fn, schema="query_id long, docid long, rsv_fixed long"
         )
-        stats = None
-        if return_stats:
-            cand = cand.persist()
+        results = self._rank_topk(cand.filter(F.col("query_id") >= 0), k)
+        if not return_stats:
+            return results
+        cand.persist()
+        try:
             m = (
                 cand.filter(F.col("query_id") < 0)
                 .agg(
@@ -2668,14 +2671,14 @@ class SearchEngine:
                 )
                 .collect()[0]
             )
-            stats = {
-                "segments_scored": int(m["s"] or 0),
-                "segments_total": int(m["t"] or 0),
-            }
-        results = self._rank_topk(cand.filter(F.col("query_id") >= 0), k)
-        if return_stats:
-            return results, stats
-        return results
+            results = self._collected(results)
+        finally:
+            cand.unpersist()
+        stats = {
+            "segments_scored": int(m["s"] or 0),
+            "segments_total": int(m["t"] or 0),
+        }
+        return results, stats
 
     # ------------------------------------------------------------------
     def _kl_select(
@@ -3060,7 +3063,7 @@ class SearchEngine:
             for t, _w in terms:
                 qmap2.setdefault(t, []).append((qid, 1, 1.0))
         if not qmap2:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return _local_result(self.spark)
         hits = self.postings.filter(F.col("term").isin(list(qmap2)))
         return self._search_puurula(
             hits, qmap2, nq2, k, "lmp", qf_scale=qf_scale
@@ -3165,7 +3168,7 @@ class SearchEngine:
                 for m, copies in members.items():
                     term_groups.setdefault(m, []).append((qid, gid, copies))
         if not term_groups:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return _local_result(self.spark)
 
         hits = self.postings.filter(F.col("term").isin(list(term_groups)))
         codec = self.codec
@@ -3580,7 +3583,7 @@ class SearchEngine:
                 use_iter = len(base) >= 3 and "a" <= base[0] <= "z"
                 gated.append((qid, gid, base, int(weight), use_iter))
         if not gated:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return _local_result(self.spark)
 
         bases = sorted({b for _, _, b, _, u in gated if u})
         overflow = False
@@ -3681,7 +3684,7 @@ class SearchEngine:
             if members:
                 groups[(qid, gid)] = (weight, members)
         if not groups:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return _local_result(self.spark)
 
         fanout: dict[str, list[tuple[int, int, float]]] = {}
         for (qid, gid), (_wt, members) in groups.items():
@@ -3937,7 +3940,7 @@ class SearchEngine:
         # no member posting survived conflation)
         dfm = {kk: v for kk, v in dfm.items() if v not in (0, n_docs)}
         if not dfm:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return _local_result(self.spark)
         wmap = {
             int(qid) * GKEY + int(gid): int(w)
             for (qid, gid), w in weights.items()
@@ -4115,7 +4118,10 @@ class SearchEngine:
                         int(vals[order[rnk - 1]]) / 100.0,
                     )
                 )
-        return self.spark.createDataFrame(out, RESULT_SCHEMA)
+        return _local_result(
+            self.spark,
+            pd.DataFrame(out, columns=_RESULT_ARROW.names) if out else None,
+        )
 
     def more_like_this(
         self,
@@ -4137,7 +4143,7 @@ class SearchEngine:
         )
         key_terms = self._kl_select([r["text"] for r in rows], terms)
         if not key_terms:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return _local_result(self.spark)
         parsed = {1: [(t, 1, 1.0) for t, _ in key_terms]}
         return self.search_batch(
             [(1, "")], k=k, ranker=ranker, parsed_terms=parsed

@@ -38,10 +38,19 @@ from __future__ import annotations
 
 import re
 import time
+from collections import OrderedDict
+from functools import reduce
 
 from pyspark.sql import functions as F
 
 __all__ = ["AtireProtocol", "serve_tcp"]
+
+# Result names are cached per block of 2^NAME_BLOCK_BITS consecutive
+# docids, at most NAME_CACHE_BLOCKS blocks (least recently used out):
+# a serving shard's hits fall in a few blocks, so a warm server
+# resolves a page's names without a Spark job.
+NAME_BLOCK_BITS = 10
+NAME_CACHE_BLOCKS = 64
 
 
 def _between(text: str, open_tag: str, close_tag: str) -> str | None:
@@ -80,27 +89,49 @@ class AtireProtocol:
         self.doclist_filename = doclist_filename
         self.results_list_length = results_list_length
         self.closed = False
-        # docid → document name, resolved lazily per result page (the
-        # reference reads names from its doclist file; ours live in
-        # the docmap)
-        self._name_cache: dict[int, str] = {}
+        # docid block → {docid: document name}, an LRU of docmap
+        # blocks (the reference reads names from its doclist file;
+        # ours live in the docmap)
+        self._name_blocks: OrderedDict[int, dict[int, str]] = OrderedDict()
 
     # ------------------------------------------------------------- names
     def _names_for(self, docids: list[int]) -> dict[int, str]:
-        missing = [d for d in docids if d not in self._name_cache]
+        """Names of a result page's docids: blocks already cached cost
+        nothing, the missing ones are read in one docmap job."""
+        blocks = {d >> NAME_BLOCK_BITS for d in docids}
+        found: dict[int, dict[int, str]] = {}
+        for b in blocks & self._name_blocks.keys():
+            self._name_blocks.move_to_end(b)
+            found[b] = self._name_blocks[b]
+        missing = sorted(blocks - found.keys())
         if missing:
+            in_missing = reduce(
+                lambda a, c: a | c,
+                (
+                    F.col("docid").between(
+                        b << NAME_BLOCK_BITS, ((b + 1) << NAME_BLOCK_BITS) - 1
+                    )
+                    for b in missing
+                ),
+            )
             rows = (
-                self.engine.index.docmap.filter(
-                    F.col("docid").isin(missing)
-                )
+                self.engine.index.docmap.filter(in_missing)
                 .select("docid", "conv_id", "turn_idx")
                 .collect()
             )
+            fetched: dict[int, dict[int, str]] = {b: {} for b in missing}
             for r in rows:
-                self._name_cache[int(r["docid"])] = (
+                d = int(r["docid"])
+                fetched[d >> NAME_BLOCK_BITS][d] = (
                     f"{r['conv_id']}:{int(r['turn_idx'])}"
                 )
-        return {d: self._name_cache.get(d, str(d)) for d in docids}
+            found.update(fetched)
+            self._name_blocks.update(fetched)
+            while len(self._name_blocks) > NAME_CACHE_BLOCKS:
+                self._name_blocks.popitem(last=False)
+        return {
+            d: found[d >> NAME_BLOCK_BITS].get(d, str(d)) for d in docids
+        }
 
     def _fetch_text(self, docid: int) -> str | None:
         if self.docstore is None:
@@ -121,11 +152,8 @@ class AtireProtocol:
         out = ["<ATIREsearch>"]
         if ranker is not None:
             try:
-                probe = self.engine.search_batch(
-                    [(1, query)], k=1, ranker=ranker
-                )
-                probe.collect()
-            except Exception:
+                self.engine.check_ranker(ranker)
+            except ValueError:
                 out.append("<error>Bad ranking function</error>")
                 out.append("</ATIREsearch>")
                 return out

@@ -15,6 +15,15 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_mem() -> str:
+    """Driver heap when ``SPARK_DRIVER_MEM`` is unset: half the
+    machine's physical memory, at most 48 GB. A local-mode JVM whose
+    heap limit exceeds the machine keeps growing its heap instead of
+    collecting, until the kernel's OOM killer ends the session."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(48, phys // 2**31))}g"
+
+
 def get_spark(
     cpus: int | None = None,
     app: str = "atire_spark",
@@ -47,7 +56,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
     )

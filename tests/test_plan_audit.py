@@ -8,9 +8,14 @@ still runs at 10^12 turns:
   filter (storage skips files by parquet/Iceberg min-max stats, the
   round-2 structural fix — without it every query reads the whole
   postings table);
-- top-k is bounded on BOTH sides of the final exchange
+- in the distributed placement (batches above the collect cap, forced
+  here by setting the cap to 0) top-k is bounded on BOTH sides of the
+  final exchange
   (``WindowGroupLimit``: partition-local heads, then the merged head —
   the shuffle carries k·queries rows, not every scored doc);
+- a serving-sized BM25 batch (the collected placement) is ONE Spark
+  job: the pushed-filter postings scan, collected as Arrow, with no
+  Python worker in it; a query with no terms is no job at all;
 - no join in any fan-out path degenerates to ``CartesianProduct``;
 - the brute-force kNN baseline broadcasts the (tiny) query side, never
   the collection;
@@ -29,6 +34,7 @@ import io
 
 import pytest
 
+from atire_spark import query as query_mod
 from atire_spark.build import build_index, load_index, write_index
 from atire_spark.corpus import (
     dedup_minhash_lsh,
@@ -58,6 +64,44 @@ def engine(spark, tmp_path_factory):
     return SearchEngine(spark, load_index(spark, path))
 
 
+@pytest.fixture
+def distributed(monkeypatch):
+    """search_batch's distributed placement: with a collect cap of 0
+    no batch is collected to the driver."""
+    monkeypatch.setattr(query_mod, "COLLECT_MAX_POSTINGS", 0)
+
+
+class TestCollectedSearchPlan:
+    def test_one_jvm_job_with_pushed_filter(self, engine, jobs_of, monkeypatch):
+        """Below the cap a batch costs exactly one Spark job: the
+        postings scan with the term filter pushed to parquet, collected
+        as Arrow — no Python UDF, no exchange — and a driver-local
+        result that collects without another job."""
+        frame_cls = type(engine.postings)
+        plans = []
+        to_arrow = frame_cls.toArrow
+
+        def spy(df):
+            plans.append(plan_of(df))
+            return to_arrow(df)
+
+        monkeypatch.setattr(frame_cls, "toArrow", spy)
+        rows, n_jobs = jobs_of(
+            lambda: engine.search_batch([(1, "alpha beta"), (2, "gamma")]).collect()
+        )
+        assert rows and n_jobs == 1
+        assert len(plans) == 1
+        scan = plans[0]
+        assert "PushedFilters: [In(term, " in scan, scan
+        assert "MapInPandas" not in scan and "Python" not in scan, scan
+        assert "Exchange" not in scan, scan
+
+    def test_query_without_terms_costs_no_job(self, engine, jobs_of):
+        rows, n_jobs = jobs_of(lambda: engine.search_batch([(1, "")]).collect())
+        assert rows == [] and n_jobs == 0
+
+
+@pytest.mark.usefixtures("distributed")
 class TestFlagshipSearchPlan:
     def test_term_filter_pushed_to_postings_scan(self, engine):
         df = engine.search_batch([(1, "alpha beta"), (2, "gamma")])
@@ -78,6 +122,7 @@ class TestFlagshipSearchPlan:
         assert "CartesianProduct" not in p, p
 
 
+@pytest.mark.usefixtures("distributed")
 class TestStreamIndexPlans:
     def test_pushdown_survives_append_and_compaction(
         self, spark, tmp_path_factory

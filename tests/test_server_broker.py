@@ -88,6 +88,56 @@ class TestProtocol:
         )
         assert "<error>Bad ranking function</error>" in lines
 
+    def test_bad_ranker_runs_no_job(self, proto, jobs_of):
+        lines, n_jobs = jobs_of(
+            lambda: proto.handle_line(
+                "<ATIREsearch><query>bravo</query>"
+                "<ranking>nosuchranker</ranking></ATIREsearch>"
+            )
+        )
+        assert lines == [
+            "<ATIREsearch>",
+            "<error>Bad ranking function</error>",
+            "</ATIREsearch>",
+        ]
+        assert n_jobs == 0
+        # a valid ranker is checked without a search of its own: with
+        # its names cached, a request costs the jobs of its one search
+        ok = "<ATIREsearch><query>bravo</query><ranking>termcount</ranking></ATIREsearch>"
+        first = proto.handle_line(ok)
+        again, n_jobs = jobs_of(lambda: proto.handle_line(ok))
+        assert again[2:] == first[2:] and "<hit>" in again[3]
+        _, search_jobs = jobs_of(
+            lambda: proto.engine.search_batch(
+                [(1, "bravo")], k=10, ranker="termcount"
+            ).collect()
+        )
+        assert n_jobs == search_jobs
+
+    def test_names_resolve_from_cached_blocks(self, proto, jobs_of, monkeypatch):
+        """Hit names come from an LRU of docid blocks: a page whose
+        blocks are cached costs no job, a page spanning more blocks
+        than the cache holds still names every hit, and the cache
+        never holds more than its block count."""
+        import atire_spark.server as server_mod
+
+        monkeypatch.setattr(server_mod, "NAME_BLOCK_BITS", 2)
+        monkeypatch.setattr(server_mod, "NAME_CACHE_BLOCKS", 2)
+        p = AtireProtocol(proto.engine)
+        want = {
+            int(r["docid"]): f"{r['conv_id']}:{int(r['turn_idx'])}"
+            for r in proto.engine.index.docmap.collect()
+        }
+        names, n_jobs = jobs_of(lambda: p._names_for([0, 5, 10]))  # 3 blocks
+        assert n_jobs == 1
+        assert names == {0: want[0], 5: want[5], 10: want[10]}
+        assert list(p._name_blocks) == [1, 2]
+        again, n_jobs = jobs_of(lambda: p._names_for([5, 10, 11]))
+        assert n_jobs == 0
+        assert again == {5: want[5], 10: want[10], 11: want[11]}
+        # a docid without a docmap row keeps its number as its name
+        assert p._names_for([99]) == {99: "99"}
+
     def test_getdoc_without_store(self, proto):
         lines = proto.handle_line("<ATIREgetdoc><docid>3</docid>")
         assert lines == ["<ATIREgetdoc>", "<length>0</length>", "</ATIREgetdoc>"]

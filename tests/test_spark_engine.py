@@ -6,6 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from atire_spark import query as query_mod
 from atire_spark.build import build_index
 from atire_spark.oracle import OracleIndex
 from atire_spark.query import SearchEngine
@@ -35,6 +36,101 @@ def small_engine(spark, small_pdf, tmp_path_factory):
 @pytest.fixture(scope="module")
 def small_oracle(small_pdf):
     return OracleIndex.build(small_pdf)
+
+
+@pytest.fixture(params=["collected", "distributed"])
+def placement(request, monkeypatch):
+    """Run a test in both placements of search_batch's grouped scorer:
+    the default cap collects every batch of these corpora; a cap of 0
+    sends every batch down the distributed path."""
+    if request.param == "distributed":
+        monkeypatch.setattr(query_mod, "COLLECT_MAX_POSTINGS", 0)
+    return request.param
+
+
+def _placement_of(df) -> str:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if "MapInPandas" in plan:
+        return "distributed"
+    assert "LocalTableScan" in plan, plan
+    return "collected"
+
+
+def _assert_ranked(got: pd.DataFrame, qid: int, want: pd.DataFrame, q: str):
+    g = got[got["query_id"] == qid]
+    assert list(g["docid"]) == list(want["docid"]), q
+    assert list(g["rsv_fixed"]) == list(want["rsv_fixed"]), q
+    assert list(g["rank"]) == list(range(1, len(g) + 1)), q
+
+
+def _terms(q: str) -> list[str]:
+    return [t.term for t in query_mod.parse_nexi(q)]
+
+
+def _top(acc: dict[int, int], k: int) -> pd.DataFrame:
+    """Accumulator {docid: int total} → the reference's top-k
+    (signed 16-bit value, rsv desc, larger docid first)."""
+    from atire_spark.kernels.bm25 import accum_value
+
+    docids = np.fromiter(acc, dtype=np.int64, count=len(acc))
+    vals = accum_value(np.fromiter(acc.values(), dtype=np.int64, count=len(acc)))
+    order = np.lexsort((-docids, -vals))[:k]
+    return pd.DataFrame({"docid": docids[order], "rsv_fixed": vals[order]})
+
+
+def _conjunctive(oracle: OracleIndex, q: str, k: int) -> pd.DataFrame:
+    """allterms: the BM25 ranking restricted to documents holding every
+    distinct query term (none of these terms has df == N)."""
+    terms = set(_terms(q))
+    every = set.intersection(*(set(oracle.postings[t][0].tolist()) for t in terms))
+    assert all(oracle.postings[t][0].size < oracle.n_docs for t in terms)
+    full = oracle.search(q, k=oracle.n_docs)
+    return full[full["docid"].isin(every)].head(k)
+
+
+def _lmds(oracle: OracleIndex, q: str, k: int) -> pd.DataFrame:
+    """LMDS u=2500 (ranking_function_lmds.c) replayed occurrence by
+    occurrence: terms in ascending cf (then term) order, each
+    occurrence adds 1 + trunc(100·rsv), plus the document prior
+    n·ln(u/(len+u)) whenever it finds the 16-bit accumulator at zero;
+    a document enters the candidates on its first nonzero addition.
+    cf is the tf sum, exact for terms whose tf never saturates."""
+    from collections import Counter
+
+    u = 2500.0
+    bag = Counter(_terms(q))
+    n = float(sum(bag.values()))
+    present = {t: w for t, w in bag.items() if t in oracle.postings}
+    cf = {t: int(oracle.postings[t][1].sum()) for t in present}
+    acc: dict[int, int] = {}
+    cand: set[int] = set()
+    for t in sorted(present, key=lambda t: (cf[t], t)):
+        docids, tfs = oracle.postings[t]
+        assert tfs.max() < 255
+        rsv = np.log((tfs / u) * (oracle.collection_len / cf[t]) + 1.0)
+        prior = np.log(u / (oracle.doc_lens[docids] + u))
+        unit = 1 + (rsv * 100.0).astype(np.int64)
+        unit_p = 1 + ((rsv + n * prior) * 100.0).astype(np.int64)
+        for _ in range(present[t]):
+            for d, a, b in zip(docids.tolist(), unit.tolist(), unit_p.tolist()):
+                cur = acc.get(d, 0)
+                add = b if cur % 65536 == 0 else a
+                if add % 65536:
+                    cand.add(d)
+                acc[d] = cur + add
+    return _top({d: acc[d] for d in cand}, k)
+
+
+def _docid_desc(oracle: OracleIndex, q: str, k: int) -> pd.DataFrame:
+    """docid_desc (ranking_function_docid.c): every document holding a
+    query term gets the positional value docid + 1."""
+    docs = {
+        d
+        for t in set(_terms(q))
+        if t in oracle.postings
+        for d in oracle.postings[t][0].tolist()
+    }
+    return _top({d: d + 1 for d in docs}, k)
 
 
 class TestInvariants:
@@ -144,18 +240,57 @@ class TestRankIdentity:
         assert list(got["docid"]) == list(want["docid"])
         assert list(got["rsv_fixed"]) == list(want["rsv_fixed"])
 
-    def test_grouped_equals_exploded_path(self, small_engine, small_oracle):
-        """The seg_group-partitioned scale scorer and the exploded
-        per-posting fallback must agree with each other and the oracle."""
+    def test_placements_match_oracle(
+        self, small_engine, small_oracle, placement
+    ):
+        """The collected (driver-scored) and the distributed
+        (seg_group-partitioned) placements of the grouped scorer both
+        agree with the oracle."""
         batch = [(1, "alpha 00001"), (2, "omegaterm"), (3, "capterm 00001")]
-        a = small_engine.search_batch(batch, k=15, grouped=True).toPandas()
-        bdf = small_engine.search_batch(batch, k=15, grouped=False).toPandas()
-        pd.testing.assert_frame_equal(a, bdf)
+        df = small_engine.search_batch(batch, k=15)
+        assert _placement_of(df) == placement
+        a = df.toPandas()
         for qid, qtext in batch:
             w = small_oracle.search(qtext, k=15)
             g = a[a["query_id"] == qid]
             assert list(g["docid"]) == list(w["docid"])
             assert list(g["rsv_fixed"]) == list(w["rsv_fixed"])
+
+    def test_placements_rank_identical_across_query_shapes(
+        self, small_engine, small_oracle, placement
+    ):
+        """Multi-term, repeated-term and absent-term queries in one
+        batch, plus conjunctive, lmds and docid_desc batches, rank
+        identically to expectations built from the oracle's postings,
+        in both placements."""
+        k = 12
+        batch = [
+            (1, "alpha bravo 00001"),
+            (2, "alpha alpha bravo"),
+            (3, "zzznotaterm alpha"),
+            (4, "zzznotaterm"),
+            (5, "term 00002"),  # "term" has df == N: contributes nothing
+        ]
+        df = small_engine.search_batch(batch, k=k)
+        assert _placement_of(df) == placement
+        got = df.toPandas()
+        for qid, qtext in batch:
+            _assert_ranked(got, qid, small_oracle.search(qtext, k=k), qtext)
+
+        conj = [(1, "alpha bravo"), (2, "alpha charlie delta")]
+        got = small_engine.search_batch(conj, k=k, conjunctive=True).toPandas()
+        for qid, qtext in conj:
+            _assert_ranked(got, qid, _conjunctive(small_oracle, qtext, k), qtext)
+
+        lm = [(1, "alpha bravo"), (2, "alpha alpha 00002"), (3, "omegaterm")]
+        got = small_engine.search_batch(lm, k=k, ranker="lmds").toPandas()
+        for qid, qtext in lm:
+            _assert_ranked(got, qid, _lmds(small_oracle, qtext, k), qtext)
+
+        dd = [(1, "alpha bravo"), (2, "capterm omegaterm")]
+        got = small_engine.search_batch(dd, k=k, ranker="docid_desc").toPandas()
+        for qid, qtext in dd:
+            _assert_ranked(got, qid, _docid_desc(small_oracle, qtext, k), qtext)
 
     def test_materialize(self, small_engine, small_pdf):
         res = small_engine.search_one("alpha", k=5)
@@ -580,6 +715,24 @@ class TestBlockMaxWand:
     def test_unquantized_rejected(self, small_engine):
         with pytest.raises(ValueError, match="quantized"):
             small_engine.search_wand([(1, "alpha")])
+
+    def test_return_stats_releases_cached_candidates(self, spark, wand_engine):
+        """search_wand and search_qaat cache their candidates for the
+        stats pass only until the results are materialized: repeated
+        calls leave no persisted RDD behind, and the results still
+        equal exhaustive evaluation."""
+        jsc = spark.sparkContext._jsc
+        exact = wand_engine.search_batch(self.BATCH, k=5).toPandas()
+        before = jsc.getPersistentRDDs().size()
+        cols = ["query_id", "rank", "docid", "rsv_fixed"]
+        for _ in range(3):
+            for search in (wand_engine.search_wand, wand_engine.search_qaat):
+                res, _stats = search(self.BATCH, k=5, return_stats=True)
+                if search == wand_engine.search_wand:
+                    pd.testing.assert_frame_equal(
+                        res.toPandas()[cols], exact[cols]
+                    )
+        assert jsc.getPersistentRDDs().size() == before
 
 
 class TestInterpolatedFeedback:

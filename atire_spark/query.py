@@ -20,10 +20,14 @@ docid first (search_engine_accumulator.h)    desc, docid desc → rank <= k
 
 The grouped scorer runs in one of two placements (see
 SearchEngine._search_grouped). A batch whose scan can hold at most
-COLLECT_MAX_POSTINGS postings is collected in one JVM-only Spark job
-and scored and ranked in the driver — the reference's in-RAM search.
-Larger batches run distributed: mapInPandas over seg_group partitions,
-then a row_number() window keeps rank <= k.
+COLLECT_MAX_POSTINGS postings is scored and ranked in the driver. Its
+rows come from the resident table when the index is small enough
+(collection length ≤ RESIDENT_MAX_POSTINGS): the reference's -M
+in-memory index (search_engine.c:52-55), loaded once, so a query runs
+no Spark job. Above that cap they come from the pushed-filter scan,
+collected in one JVM-only job. Larger batches run distributed:
+mapInPandas over seg_group partitions, then a row_number() window
+keeps rank <= k.
 
 Segments are self-contained (global df on the row, doc lengths inline),
 so scoring is embarrassingly parallel: no docmap join, no broadcast of
@@ -35,6 +39,7 @@ from __future__ import annotations
 
 import functools
 import re
+import threading
 from collections import Counter
 from typing import Iterator
 
@@ -77,6 +82,47 @@ _RESULT_ARROW = pa.schema(
 # below it.
 COLLECT_MAX_POSTINGS = 1 << 20
 
+# An index whose collection length (tokens, which bounds Σ df and so
+# its postings) is at most this is held resident on the driver, see
+# _Resident. Postings take ~2.8 B of Arrow per token, so 2^23 tokens
+# are ~24 MB: a serving shard, or a stream index after tens of
+# 2k-turn appends. Read at query time.
+RESIDENT_MAX_POSTINGS = 1 << 23
+
+
+class _Resident:
+    """The reference's ``-M`` in-memory index (search_engine.c:52-55)
+    on the driver: the whole postings table as Arrow, sorted by term so
+    a query's rows are one binary search per term, and the docmap's
+    ``conv_id:turn_idx`` names, sorted by docid."""
+
+    def __init__(self, index: IndexTables):
+        self.postings = index.postings.toArrow().sort_by("term")
+        self.terms = self.postings["term"].to_numpy()
+        name = F.concat_ws(":", "conv_id", F.col("turn_idx").cast("string"))
+        names = index.docmap.select("docid", name.alias("name")).toArrow().sort_by("docid")
+        self.docids = names["docid"].to_numpy()
+        self.names = names["name"].to_numpy()
+
+    def rows(self, terms: list[str]) -> pd.DataFrame:
+        """The postings rows of ``terms``: what the pushed-filter scan
+        ``postings.filter(term isin terms)`` returns."""
+        lo = np.searchsorted(self.terms, terms, side="left")
+        hi = np.searchsorted(self.terms, terms, side="right")
+        take = np.concatenate([np.arange(a, b) for a, b in zip(lo, hi)])
+        return self.postings.take(take).to_pandas()
+
+    def names_of(self, docids: list[int]) -> dict[int, str]:
+        """docid → name; a docid without a docmap row keeps its
+        number."""
+        pos = np.searchsorted(self.docids, docids)
+        return {
+            d: self.names[p]
+            if p < len(self.docids) and self.docids[p] == d
+            else str(d)
+            for d, p in zip(docids, pos)
+        }
+
 
 def _local_result(spark: SparkSession, ranked: pd.DataFrame | None = None) -> DataFrame:
     """A RESULT_SCHEMA frame held on the driver (``None`` → empty).
@@ -90,10 +136,12 @@ def _local_result(spark: SparkSession, ranked: pd.DataFrame | None = None) -> Da
     )
 
 
-def _rank_local(cand: pd.DataFrame, k: int) -> pd.DataFrame:
+def _rank_local(cand: pd.DataFrame | None, k: int) -> pd.DataFrame:
     """:meth:`SearchEngine._rank_topk` on a driver-side candidate frame:
     rsv_fixed desc, tie larger-docid-first, rank <= k, ordered by
-    (query_id, rank)."""
+    (query_id, rank). No candidates (``None``) → an empty frame."""
+    if cand is None:
+        return _RESULT_ARROW.empty_table().to_pandas()
     out = cand.sort_values(
         ["query_id", "rsv_fixed", "docid"], ascending=[True, False, False]
     )
@@ -927,8 +975,8 @@ def _grouped_topk(
 
     Exact for every docid whose matched segments all arrive in
     ``batches``: a task of the distributed placement (rows co-located
-    on seg_group) or the driver of the collected placement (every
-    matched row). See :meth:`SearchEngine._search_grouped`.
+    on seg_group) or the driver placement (every matched row). See
+    :meth:`SearchEngine._search_grouped`.
     """
     qids: list[np.ndarray] = []
     docs: list[np.ndarray] = []
@@ -1080,18 +1128,17 @@ class SearchEngine:
         self,
         spark: SparkSession,
         index: IndexTables,
-        cache: bool = False,
         stemmer: str | None = "auto",
         cjk_segmenter=None,
     ):
-        """``cache=False`` (default) leaves the postings scan on
-        storage so the pushed-down term ``isin`` filter prunes
-        parquet/Iceberg files — at 10^12 docs the postings table cannot
-        fit in cluster memory, and an InMemoryTableScan filters cached
-        batches instead of skipping files. ``cache=True`` is the
-        reference's -M in-memory index mode (search_engine.c:52-55) →
-        executor block-manager cache; only sensible when the whole
-        index fits.
+        """The reference's -M in-memory index mode
+        (search_engine.c:52-55) is chosen from the index's size, not
+        by a flag: an index of at most :data:`RESIDENT_MAX_POSTINGS`
+        tokens is held on the driver (:class:`_Resident`), loaded by
+        the first query placed there. A larger one stays on storage,
+        where the pushed-down term ``isin`` filter prunes
+        parquet/Iceberg files per query — at 10^12 docs the postings
+        table fits in no memory.
 
         ``stemmer="auto"`` follows the index's recorded ``~stemmer``
         (memory_index.c:1487-1521); passing an explicit stemmer that
@@ -1106,6 +1153,7 @@ class SearchEngine:
         self.cjk_segmenter = cjk_segmenter
         self.index = index
         row = index.stats.collect()[0].asDict()
+        self.stats_row = row
         self.n_docs = int(row["documents"])
         # an all-empty collection's stats row carries NULL sums/means
         # (aggregates over zero docmap rows); searching such an index
@@ -1127,8 +1175,9 @@ class SearchEngine:
         else:
             self.stemmer = stemmer
         self.postings = index.postings
-        if cache:
-            self.postings = self.postings.cache()
+        # see _resident
+        self._resident_index: _Resident | None = None
+        self._resident_lock = threading.Lock()
         # stemmer → persisted (term, stem, cprefix) vocabulary map;
         # see precompute_stem_classes
         self._stem_class_tables: dict[str, DataFrame] = {}
@@ -1271,10 +1320,52 @@ class SearchEngine:
         opt-in so the default path stays exact-evaluation.
 
         A batch whose postings scan is small enough is scored in the
-        driver and comes back as a driver-local frame (one Spark job,
-        run here); larger batches return a lazy distributed plan — see
-        :meth:`_search_grouped`. A batch with no terms costs no job.
+        driver and comes back as a driver-local frame (no Spark job on
+        a resident index, one otherwise, run here); larger batches
+        return a lazy distributed plan — see :meth:`_search_grouped`.
+        A batch with no terms costs no job.
         """
+        res = self._search(
+            queries, k, ranker, conjunctive, parsed_terms,
+            trim_postings_k, single_term_prune,
+        )
+        return _local_result(self.spark, res) if isinstance(res, pd.DataFrame) else res
+
+    def search_ranked(
+        self, queries: list[tuple[int, str]], k: int = 10, ranker: str = "bm25"
+    ) -> pd.DataFrame:
+        """:meth:`search_batch`'s rows as a driver pandas frame, ordered
+        by (query_id, rank), for a caller that reads them itself (the
+        server). A batch scored on the driver skips the Spark local
+        frame; any other result is collected."""
+        res = self._search(queries, k, ranker)
+        if isinstance(res, DataFrame):
+            res = pd.DataFrame.from_records(res.collect(), columns=_RESULT_ARROW.names)
+        return res
+
+    def resident_names(self, docids: list[int]) -> dict[int, str] | None:
+        """docid → ``conv_id:turn_idx`` from the resident docmap (no
+        Spark job once loaded), or None above the resident cap."""
+        res = self._resident()
+        return None if res is None else res.names_of(docids)
+
+    def _resident(self) -> _Resident | None:
+        """The resident index, loaded by its first caller (once, also
+        under concurrent first requests), or None when the collection
+        is longer than :data:`RESIDENT_MAX_POSTINGS`."""
+        if self.collection_len > RESIDENT_MAX_POSTINGS:
+            return None
+        with self._resident_lock:
+            if self._resident_index is None:
+                self._resident_index = _Resident(self.index)
+        return self._resident_index
+
+    def _search(
+        self, queries, k, ranker, conjunctive=False, parsed_terms=None,
+        trim_postings_k=None, single_term_prune=False,
+    ) -> pd.DataFrame | DataFrame:
+        """:meth:`search_batch`: the ranked rows when the batch is
+        scored on the driver, else a result DataFrame."""
         self.check_ranker(ranker)
         if (
             self.stemmer is not None
@@ -1326,7 +1417,7 @@ class SearchEngine:
             for term, weight, post in parsed:
                 qmap.setdefault(term, []).append((qid, weight, post))
         if not qmap:
-            return _local_result(self.spark)
+            return _rank_local(None, k)
 
         hits = self.postings.filter(F.col("term").isin(list(qmap)))
 
@@ -1923,19 +2014,20 @@ class SearchEngine:
         conjunctive: bool,
         trim_for: dict[tuple[int, str], int] | None = None,
         term_aux: dict | None = None,
-    ) -> DataFrame:
+    ) -> pd.DataFrame | DataFrame:
         """The grouped scorer (:func:`_grouped_topk`) in one of two
         placements, chosen without a Spark job:
 
-        - **Collected** — the batch's pushed-filter scan can hold at
-          most :data:`COLLECT_MAX_POSTINGS` postings (Σ df over the
+        - **Driver** — the batch's pushed-filter scan can hold at most
+          :data:`COLLECT_MAX_POSTINGS` postings (Σ df over the
           distinct terms ≤ terms × N bounds its rows and bytes). The
-          scan is collected as Arrow in one JVM-only job and scored in
-          the driver process, where the scorer sees every matched row
-          and so emits the exact top-k; the ranked result comes back
-          as a driver-local frame. This is the reference's in-RAM
-          term-at-a-time search (``-M``) for serving-sized shards, and
-          it costs neither a Python worker nor a shuffle.
+          matched rows are scored in the driver process, where the
+          scorer sees every one and so emits the exact top-k, returned
+          as a ranked pandas frame. The rows come from the resident
+          table (:meth:`_resident`, no Spark job) or, above its cap,
+          from the scan collected as Arrow in one JVM-only job. This
+          is the reference's in-RAM term-at-a-time search, and it
+          costs neither a Python worker nor a shuffle.
         - **Distributed** — above the cap (or with read-side trims,
           whose per-term prefix sums run distributed, see
           :meth:`_with_trim_cum`): partition by seg_group so every
@@ -1959,10 +2051,9 @@ class SearchEngine:
             quantized=self.quantized, codec=self.codec,
         )
         if not trim_for and len(qmap) * self.n_docs <= COLLECT_MAX_POSTINGS:
-            cand = next(score([hits.toArrow().to_pandas()]), None)
-            return _local_result(
-                self.spark, None if cand is None else _rank_local(cand, k)
-            )
+            res = self._resident()
+            rows = hits.toArrow().to_pandas() if res is None else res.rows(list(qmap))
+            return _rank_local(next(score([rows]), None), k)
         # the seg_group repartition co-locates every segment a docid's
         # accumulation needs — but a docid only spans MULTIPLE matched
         # rows when its query has ≥2 distinct terms (the build merges a

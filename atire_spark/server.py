@@ -31,7 +31,9 @@ surface is a thin threaded wrapper (:func:`serve_tcp`). A long-running
 server holds one warm SparkSession + SearchEngine — the deployment
 shape is one protocol frontend per cluster, queries fanned to
 executors by the engine itself, exactly how the reference pairs one
-``atire`` process with its in-RAM index.
+``atire`` process with its in-RAM index. A small index is held
+resident on the driver (the reference's ``-M``), where a request runs
+no Spark job: the engine hands back the ranked rows and the names.
 """
 
 from __future__ import annotations
@@ -45,10 +47,10 @@ from pyspark.sql import functions as F
 
 __all__ = ["AtireProtocol", "serve_tcp"]
 
-# Result names are cached per block of 2^NAME_BLOCK_BITS consecutive
-# docids, at most NAME_CACHE_BLOCKS blocks (least recently used out):
-# a serving shard's hits fall in a few blocks, so a warm server
-# resolves a page's names without a Spark job.
+# Above the engine's resident cap, result names are cached per block
+# of 2^NAME_BLOCK_BITS consecutive docids, at most NAME_CACHE_BLOCKS
+# blocks (least recently used out): a shard's hits fall in a few
+# blocks, so a warm server resolves a page's names without a Spark job.
 NAME_BLOCK_BITS = 10
 NAME_CACHE_BLOCKS = 64
 
@@ -90,8 +92,9 @@ class AtireProtocol:
         self.results_list_length = results_list_length
         self.closed = False
         # docid block → {docid: document name}, an LRU of docmap
-        # blocks (the reference reads names from its doclist file;
-        # ours live in the docmap)
+        # blocks for an engine without a resident docmap (the
+        # reference reads names from its doclist file; ours live in
+        # the docmap)
         self._name_blocks: OrderedDict[int, dict[int, str]] = OrderedDict()
 
     # ------------------------------------------------------------- names
@@ -159,27 +162,29 @@ class AtireProtocol:
                 return out
         t0 = time.monotonic()
         k = max(last_to_list, 1)
-        rows = self.engine.search_batch(
+        ranked = self.engine.search_ranked(
             [(1, query)], k=k, ranker=ranker or "bm25"
-        ).collect()
+        )
         ms = int(round((time.monotonic() - t0) * 1000.0))
-        numhits = len(rows)
+        numhits = len(ranked)
         out.append(
             f"<query>{query}</query><numhits>{numhits}</numhits>"
             f"<time>{ms}</time>"
         )
         lo = min(max(first_to_list, 0), numhits)
         hi = min(max(last_to_list, lo), numhits)
-        page = rows[lo:hi]
-        if page:
-            names = self._names_for([int(r["docid"]) for r in page])
+        page = ranked.iloc[lo:hi]
+        if len(page):
+            ids = [int(d) for d in page["docid"]]
+            names = self.engine.resident_names(ids)
+            if names is None:
+                names = self._names_for(ids)
             out.append("<hits>")
-            for r in page:
-                d = int(r["docid"])
+            for d, rank, rsv in zip(ids, page["rank"], page["rsv"]):
                 out.append(
-                    f"<hit><rank>{int(r['rank'])}</rank><id>{d}</id>"
+                    f"<hit><rank>{int(rank)}</rank><id>{d}</id>"
                     f"<name>{names[d]}</name>"
-                    f"<rsv>{float(r['rsv']):0.2f}</rsv></hit>"
+                    f"<rsv>{float(rsv):0.2f}</rsv></hit>"
                 )
             out.append("</hits>")
         out.append("</ATIREsearch>")
@@ -187,7 +192,7 @@ class AtireProtocol:
 
     def _describe_block(self) -> list[str]:
         eng = self.engine
-        srow = eng.index.stats.collect()[0].asDict()
+        srow = eng.stats_row
         return [
             "<ATIREdescribeindex>",
             f'<doclist filename="{self.doclist_filename}"/>',

@@ -125,18 +125,77 @@ def append_batch(
         batch, stemmer=stemmer, stop_before_indexing=stop_before_indexing
     )
     n_ranges = max(spark.sparkContext.defaultParallelism, 4)
-    stage_dir = tempfile.mkdtemp(prefix="atire_stream_stage_")
-    staged, offsets, n_new, _coll_len = _stage_sorted(
-        tokenized,
-        stage_dir,
-        num_ranges=n_ranges,
-        bounds=_range_bounds(batch, n_ranges),
-    )
-    if n_new == 0:
+    # the staged batch is read by every write below; nothing reads it
+    # once the epoch is recorded
+    with tempfile.TemporaryDirectory(
+        prefix="atire_stream_stage_", ignore_cleanup_errors=True
+    ) as stage_dir:
+        staged, offsets, n_new, _coll_len = _stage_sorted(
+            tokenized,
+            stage_dir,
+            num_ranges=n_ranges,
+            bounds=_range_bounds(batch, n_ranges),
+        )
+        if n_new == 0:
+            _write_state(
+                index_dir,
+                {
+                    "n_docs": base,
+                    "last_epoch": int(epoch_id),
+                    "stemmer": stemmer or "",
+                },
+            )
+            _append_ingest_log(
+                spark,
+                index_dir,
+                {
+                    "epoch": int(epoch_id),
+                    "docs_added": 0,
+                    "turns_seen": None,
+                    "postings_rows": 0,
+                    "postings_bytes": 0,
+                    "wall_sec": round(_time.monotonic() - t0, 3),
+                },
+            )
+            return 0
+        # shift this batch's docids past everything already indexed
+        offsets = {pid: off + base for pid, off in offsets.items()}
+
+        docmap = staged.join(
+            F.broadcast(
+                spark.createDataFrame(
+                    [(int(p), int(o)) for p, o in sorted(offsets.items())],
+                    "pid int, docid_offset long",
+                )
+            ),
+            "pid",
+        ).select(
+            (F.col("docid_offset") + F.col("local_idx")).cast("long").alias("docid"),
+            "conv_id",
+            "turn_idx",
+            "doc_len",
+        )
+        stage1 = _stage1_from_staged(staged, offsets, STREAM_BLOCK_BITS)
+        registry: list = []
+        postings, term_stats = segments_from_stage1(stage1, 1, registry=registry)
+        seg_cols = [c for c in postings.columns if c not in ("df", "cf")]
+        postings.select(*seg_cols).write.mode("append").parquet(
+            f"{index_dir}/segments"
+        )
+        term_stats.write.mode("append").parquet(f"{index_dir}/term_stats")
+        docmap.write.mode("append").parquet(f"{index_dir}/docmap")
+        # per-epoch metrics over the persisted stage (one extra agg job,
+        # no re-tokenize): segment rows emitted + compressed posting bytes
+        m = postings.agg(
+            F.count("*").alias("rows"),
+            F.sum(F.length("postings")).alias("bytes"),
+        ).collect()[0]
+        for df_ in registry:
+            df_.unpersist()
         _write_state(
             index_dir,
             {
-                "n_docs": base,
+                "n_docs": base + n_new,
                 "last_epoch": int(epoch_id),
                 "stemmer": stemmer or "",
             },
@@ -146,69 +205,14 @@ def append_batch(
             index_dir,
             {
                 "epoch": int(epoch_id),
-                "docs_added": 0,
+                "docs_added": int(n_new),
                 "turns_seen": None,
-                "postings_rows": 0,
-                "postings_bytes": 0,
+                "postings_rows": int(m["rows"]),
+                "postings_bytes": int(m["bytes"] or 0),
                 "wall_sec": round(_time.monotonic() - t0, 3),
             },
         )
-        return 0
-    # shift this batch's docids past everything already indexed
-    offsets = {pid: off + base for pid, off in offsets.items()}
-
-    docmap = staged.join(
-        F.broadcast(
-            spark.createDataFrame(
-                [(int(p), int(o)) for p, o in sorted(offsets.items())],
-                "pid int, docid_offset long",
-            )
-        ),
-        "pid",
-    ).select(
-        (F.col("docid_offset") + F.col("local_idx")).cast("long").alias("docid"),
-        "conv_id",
-        "turn_idx",
-        "doc_len",
-    )
-    stage1 = _stage1_from_staged(staged, offsets, STREAM_BLOCK_BITS)
-    registry: list = []
-    postings, term_stats = segments_from_stage1(stage1, 1, registry=registry)
-    seg_cols = [c for c in postings.columns if c not in ("df", "cf")]
-    postings.select(*seg_cols).write.mode("append").parquet(
-        f"{index_dir}/segments"
-    )
-    term_stats.write.mode("append").parquet(f"{index_dir}/term_stats")
-    docmap.write.mode("append").parquet(f"{index_dir}/docmap")
-    # per-epoch metrics over the persisted stage (one extra agg job,
-    # no re-tokenize): segment rows emitted + compressed posting bytes
-    m = postings.agg(
-        F.count("*").alias("rows"),
-        F.sum(F.length("postings")).alias("bytes"),
-    ).collect()[0]
-    for df_ in registry:
-        df_.unpersist()
-    _write_state(
-        index_dir,
-        {
-            "n_docs": base + n_new,
-            "last_epoch": int(epoch_id),
-            "stemmer": stemmer or "",
-        },
-    )
-    _append_ingest_log(
-        spark,
-        index_dir,
-        {
-            "epoch": int(epoch_id),
-            "docs_added": int(n_new),
-            "turns_seen": None,
-            "postings_rows": int(m["rows"]),
-            "postings_bytes": int(m["bytes"] or 0),
-            "wall_sec": round(_time.monotonic() - t0, 3),
-        },
-    )
-    return n_new
+        return n_new
 
 
 def stream_build(

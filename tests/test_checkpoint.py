@@ -88,7 +88,7 @@ def test_resume_skips_done_chunks_and_is_identical(spark, workdir, monkeypatch):
     assert tok_rows["turns_parsed"].sum() == len(pdf)
 
     # resumed index is rank-identical to the oracle
-    eng = SearchEngine(spark, tables, cache=False)
+    eng = SearchEngine(spark, tables)
     oracle = OracleIndex.build(pdf)
     got = eng.search_one("alpha", k=10).toPandas()
     want = oracle.search("alpha", k=10)

@@ -13,9 +13,10 @@ still runs at 10^12 turns:
   final exchange
   (``WindowGroupLimit``: partition-local heads, then the merged head —
   the shuffle carries k·queries rows, not every scored doc);
-- a serving-sized BM25 batch (the collected placement) is ONE Spark
-  job: the pushed-filter postings scan, collected as Arrow, with no
-  Python worker in it; a query with no terms is no job at all;
+- a serving-sized BM25 batch on an index that is not resident (the
+  collected scan, forced here by setting the resident cap to 0) is ONE
+  Spark job: the pushed-filter postings scan, collected as Arrow, with
+  no Python worker in it; a query with no terms is no job at all;
 - no join in any fan-out path degenerates to ``CartesianProduct``;
 - the brute-force kNN baseline broadcasts the (tiny) query side, never
   the collection;
@@ -65,12 +66,20 @@ def engine(spark, tmp_path_factory):
 
 
 @pytest.fixture
-def distributed(monkeypatch):
+def per_query_scan(monkeypatch):
+    """No index is resident on the driver: a driver-placed batch reads
+    its pushed-filter postings scan."""
+    monkeypatch.setattr(query_mod, "RESIDENT_MAX_POSTINGS", 0)
+
+
+@pytest.fixture
+def distributed(per_query_scan, monkeypatch):
     """search_batch's distributed placement: with a collect cap of 0
     no batch is collected to the driver."""
     monkeypatch.setattr(query_mod, "COLLECT_MAX_POSTINGS", 0)
 
 
+@pytest.mark.usefixtures("per_query_scan")
 class TestCollectedSearchPlan:
     def test_one_jvm_job_with_pushed_filter(self, engine, jobs_of, monkeypatch):
         """Below the cap a batch costs exactly one Spark job: the

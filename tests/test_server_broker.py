@@ -81,6 +81,43 @@ class TestProtocol:
         dot = proto.handle_line(".describeindex")
         assert dot[2] == str(proto.engine.n_docs)
 
+    def test_describeindex_runs_no_job(self, proto, jobs_of):
+        """describeindex reads the stats row the engine collected at
+        open: no Spark job, the same reply as from the stats table."""
+        eng = proto.engine
+        srow = eng.index.stats.collect()[0]
+        lines, n_jobs = jobs_of(lambda: proto.handle_line("<ATIREdescribeindex>"))
+        assert n_jobs == 0
+        assert lines == [
+            "<ATIREdescribeindex>",
+            '<doclist filename="dl"/>',
+            '<index filename="idx.aspt"/>',
+            f"<docnum>{eng.n_docs}</docnum>",
+            f"<termnum>{eng.collection_len}</termnum>",
+            f"<uniquetermnum>{eng.unique_terms}</uniquetermnum>",
+            "<quantized>0</quantized>",
+            f"<quantmax>{float(srow['quant_max'] or 0.0)}</quantmax>",
+            f"<quantmin>{float(srow['quant_min'] or 0.0)}</quantmin>",
+            "<longestdoc>0</longestdoc>",
+            "</ATIREdescribeindex>",
+        ]
+
+    def test_resident_request_runs_no_job(self, proto, jobs_of, monkeypatch):
+        """A warm resident engine answers a request, names included,
+        without a Spark job, and its reply is the one the per-query
+        scan and the docmap name blocks give."""
+        import atire_spark.query as query_mod
+
+        q = "<ATIREsearch><query>alpha bravo</query><n>8</n></ATIREsearch>"
+        proto.handle_line(q)  # loads the resident index
+        lines, n_jobs = jobs_of(lambda: proto.handle_line(q))
+        assert n_jobs == 0
+        assert sum(ln.startswith("<hit>") for ln in lines) == 8
+        monkeypatch.setattr(query_mod, "RESIDENT_MAX_POSTINGS", 0)
+        scanned = AtireProtocol(proto.engine).handle_line(q)
+        assert scanned[2:] == lines[2:]
+        assert scanned[1].split("<time>")[0] == lines[1].split("<time>")[0]
+
     def test_bad_ranker_error(self, proto):
         lines = proto.handle_line(
             "<ATIREsearch><query>bravo</query>"

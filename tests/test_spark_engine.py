@@ -38,11 +38,15 @@ def small_oracle(small_pdf):
     return OracleIndex.build(small_pdf)
 
 
-@pytest.fixture(params=["collected", "distributed"])
+@pytest.fixture(params=["resident", "collected", "distributed"])
 def placement(request, monkeypatch):
-    """Run a test in both placements of search_batch's grouped scorer:
-    the default cap collects every batch of these corpora; a cap of 0
+    """Run a test on each row source and placement of search_batch's
+    grouped scorer: by default these corpora are resident on the driver
+    and every batch is scored there; a resident cap of 0 scores the
+    collected pushed-filter scan instead; a collect cap of 0 as well
     sends every batch down the distributed path."""
+    if request.param != "resident":
+        monkeypatch.setattr(query_mod, "RESIDENT_MAX_POSTINGS", 0)
     if request.param == "distributed":
         monkeypatch.setattr(query_mod, "COLLECT_MAX_POSTINGS", 0)
     return request.param
@@ -53,7 +57,12 @@ def _placement_of(df) -> str:
     if "MapInPandas" in plan:
         return "distributed"
     assert "LocalTableScan" in plan, plan
-    return "collected"
+    return "driver"  # from the resident table or the collected scan
+
+
+def _assert_placement(df, placement: str) -> None:
+    want = "distributed" if placement == "distributed" else "driver"
+    assert _placement_of(df) == want
 
 
 def _assert_ranked(got: pd.DataFrame, qid: int, want: pd.DataFrame, q: str):
@@ -234,7 +243,7 @@ class TestRankIdentity:
         """Different block/segment parameters must not change results."""
         tdf = spark.createDataFrame(small_pdf)
         idx = build_index(spark, tdf, block_bits=20, blocks_per_seg=4096)
-        eng = SearchEngine(spark, idx, cache=False)
+        eng = SearchEngine(spark, idx)
         got = eng.search_batch([(1, "alpha bravo 00001")], k=20).toPandas()
         want = small_oracle.search("alpha bravo 00001", k=20)
         assert list(got["docid"]) == list(want["docid"])
@@ -248,7 +257,7 @@ class TestRankIdentity:
         agree with the oracle."""
         batch = [(1, "alpha 00001"), (2, "omegaterm"), (3, "capterm 00001")]
         df = small_engine.search_batch(batch, k=15)
-        assert _placement_of(df) == placement
+        _assert_placement(df, placement)
         a = df.toPandas()
         for qid, qtext in batch:
             w = small_oracle.search(qtext, k=15)
@@ -257,12 +266,13 @@ class TestRankIdentity:
             assert list(g["rsv_fixed"]) == list(w["rsv_fixed"])
 
     def test_placements_rank_identical_across_query_shapes(
-        self, small_engine, small_oracle, placement
+        self, small_engine, small_oracle, placement, jobs_of
     ):
         """Multi-term, repeated-term and absent-term queries in one
         batch, plus conjunctive, lmds and docid_desc batches, rank
         identically to expectations built from the oracle's postings,
-        in both placements."""
+        on every row source and placement; a warm resident engine
+        answers without a Spark job."""
         k = 12
         batch = [
             (1, "alpha bravo 00001"),
@@ -271,8 +281,13 @@ class TestRankIdentity:
             (4, "zzznotaterm"),
             (5, "term 00002"),  # "term" has df == N: contributes nothing
         ]
-        df = small_engine.search_batch(batch, k=k)
-        assert _placement_of(df) == placement
+        small_engine.search_batch(batch, k=k)  # warm: loads a resident table
+        df, n_jobs = jobs_of(lambda: small_engine.search_batch(batch, k=k))
+        _assert_placement(df, placement)
+        if placement != "distributed":
+            # the resident table answers without a job, the collected
+            # scan in one
+            assert n_jobs == (0 if placement == "resident" else 1)
         got = df.toPandas()
         for qid, qtext in batch:
             _assert_ranked(got, qid, small_oracle.search(qtext, k=k), qtext)
@@ -291,6 +306,45 @@ class TestRankIdentity:
         got = small_engine.search_batch(dd, k=k, ranker="docid_desc").toPandas()
         for qid, qtext in dd:
             _assert_ranked(got, qid, _docid_desc(small_oracle, qtext, k), qtext)
+
+    def test_resident_index_loads_once_under_concurrent_first_queries(
+        self, spark, small_engine, monkeypatch
+    ):
+        """Threads that issue their first search on a fresh engine at
+        once load its resident index once, and each gets the result of
+        a single-threaded search."""
+        import sys
+        import threading
+        from concurrent.futures import ThreadPoolExecutor
+
+        batch = [(1, "alpha bravo 00001"), (2, "omegaterm")]
+        want = SearchEngine(spark, small_engine.index).search_ranked(batch, k=20)
+        loads = []
+
+        class Counted(query_mod._Resident):
+            def __init__(self, index):
+                loads.append(threading.get_ident())
+                super().__init__(index)
+
+        monkeypatch.setattr(query_mod, "_Resident", Counted)
+        eng = SearchEngine(spark, small_engine.index)
+        n = 6
+        start = threading.Barrier(n)
+
+        def first_search(_):
+            start.wait(timeout=60)
+            return eng.search_ranked(batch, k=20)
+
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            with ThreadPoolExecutor(n) as ex:
+                got = list(ex.map(first_search, range(n), timeout=300))
+        finally:
+            sys.setswitchinterval(interval)
+        assert len(loads) == 1
+        for g in got:
+            pd.testing.assert_frame_equal(g, want)
 
     def test_materialize(self, small_engine, small_pdf):
         res = small_engine.search_one("alpha", k=5)

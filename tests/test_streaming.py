@@ -2,6 +2,7 @@
 to the same searchable state as one batch build (the reference's
 multi-part-index + merge recipe, run continuously)."""
 
+import glob
 import os
 import tempfile
 
@@ -101,6 +102,21 @@ def test_epoch_replay_is_idempotent(spark, stream_dirs):
     assert row["epoch"] == 0 and row["docs_added"] == 3
     assert row["postings_rows"] > 0 and row["postings_bytes"] > 0
     assert row["wall_sec"] > 0
+
+
+def test_appends_leave_no_staging_dirs(spark, stream_dirs, tmp_path, monkeypatch):
+    """append_batch removes the directory it stages a batch in once the
+    epoch is written, also for a batch that adds no document."""
+    from atire_spark.streaming import append_batch
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    index_dir, _ = stream_dirs
+    os.makedirs(index_dir, exist_ok=True)
+    empty = pd.DataFrame({"conv_id": ["e0"], "turn_idx": [0], "text": [""]})
+    assert append_batch(spark, spark.createDataFrame(BATCH1), index_dir, 0) == 3
+    assert append_batch(spark, spark.createDataFrame(empty), index_dir, 1) == 0
+    assert append_batch(spark, spark.createDataFrame(BATCH2), index_dir, 2) == 2
+    assert not glob.glob(os.path.join(tempfile.gettempdir(), "atire_stream_stage_*"))
 
 
 def test_compacted_stream_index_scores_identical(spark, stream_dirs):

@@ -18,16 +18,14 @@ uint16 fixed-point accumulator array         numpy groupby(query_id,
 top-k heap + partial sort, tie larger        exact per-query top-k, rsv
 docid first (search_engine_accumulator.h)    desc, docid desc → rank <= k
 
-The grouped scorer runs in one of two placements (see
-SearchEngine._search_grouped). A batch whose scan can hold at most
-COLLECT_MAX_POSTINGS postings is scored and ranked in the driver. Its
-rows come from the resident table when the index is small enough
-(collection length ≤ RESIDENT_MAX_POSTINGS): the reference's -M
-in-memory index (search_engine.c:52-55), loaded once, so a query runs
-no Spark job. Above that cap they come from the pushed-filter scan,
-collected in one JVM-only job. Larger batches run distributed:
-mapInPandas over seg_group partitions, then a row_number() window
-keeps rank <= k.
+The grouped scorer runs in one of two placements, a property of the
+index (see SearchEngine._search_grouped). An index of at most
+RESIDENT_MAX_POSTINGS tokens is resident on the driver: the
+reference's -M in-memory index (search_engine.c:52-55), loaded once,
+so a query filters it in process and runs no Spark job. Any other
+index, or a batch with read-side trims, runs distributed: mapInPandas
+over seg_group partitions, then a row_number() window keeps
+rank <= k.
 
 Segments are self-contained (global df on the row, doc lengths inline),
 so scoring is embarrassingly parallel: no docmap join, no broadcast of
@@ -74,38 +72,42 @@ _RESULT_ARROW = pa.schema(
     ]
 )
 
-# Collected placement of search_batch's grouped scorer: a batch whose
-# pushed-filter postings scan can hold at most this many postings
-# (Σ df over its distinct terms ≤ terms × N) is collected to the driver
-# in one job and scored there. 2^20 postings are a few MB of segment
-# bytes and tens of MB decoded; a serving shard's 5-term query is far
-# below it.
-COLLECT_MAX_POSTINGS = 1 << 20
-
 # An index whose collection length (tokens, which bounds Σ df and so
 # its postings) is at most this is held resident on the driver, see
-# _Resident. Postings take ~2.8 B of Arrow per token, so 2^23 tokens
-# are ~24 MB: a serving shard, or a stream index after tens of
-# 2k-turn appends. Read at query time.
-RESIDENT_MAX_POSTINGS = 1 << 23
+# _Resident. Postings take 0.9-2.8 B of Arrow per token (0.9 B
+# measured on bench.py's 140k-turn corpus), so 2^25 tokens are
+# ~30-95 MB: a serving shard, a stream index after ~130 2k-turn
+# appends, or bench.py's 140k-turn index. Read at query time.
+RESIDENT_MAX_POSTINGS = 1 << 25
+
+# search_stemmed_iterator collects a batch's stem-class members to the
+# driver when they number at most this (the query-bounded case); a
+# larger population stays a DataFrame and reaches the postings through
+# joins. Read at query time.
+CLASS_COLLECT_MAX = 10_000
+
+
+def _doc_name():
+    """A docmap row's document name, ``conv_id:turn_idx``."""
+    return F.concat_ws(":", "conv_id", F.col("turn_idx").cast("string")).alias("name")
 
 
 class _Resident:
     """The reference's ``-M`` in-memory index (search_engine.c:52-55)
-    on the driver: the whole postings table as Arrow, sorted by term so
-    a query's rows are one binary search per term, and the docmap's
-    ``conv_id:turn_idx`` names, sorted by docid."""
+    on the driver, the only row source of a driver-placed batch: the
+    whole postings table as Arrow, sorted by term so a query's rows are
+    one binary search per term, and the docmap's names, sorted by
+    docid. Loaded once per engine."""
 
     def __init__(self, index: IndexTables):
         self.postings = index.postings.toArrow().sort_by("term")
         self.terms = self.postings["term"].to_numpy()
-        name = F.concat_ws(":", "conv_id", F.col("turn_idx").cast("string"))
-        names = index.docmap.select("docid", name.alias("name")).toArrow().sort_by("docid")
+        names = index.docmap.select("docid", _doc_name()).toArrow().sort_by("docid")
         self.docids = names["docid"].to_numpy()
         self.names = names["name"].to_numpy()
 
     def rows(self, terms: list[str]) -> pd.DataFrame:
-        """The postings rows of ``terms``: what the pushed-filter scan
+        """The postings rows of ``terms``: what
         ``postings.filter(term isin terms)`` returns."""
         lo = np.searchsorted(self.terms, terms, side="left")
         hi = np.searchsorted(self.terms, terms, side="right")
@@ -113,14 +115,12 @@ class _Resident:
         return self.postings.take(take).to_pandas()
 
     def names_of(self, docids: list[int]) -> dict[int, str]:
-        """docid → name; a docid without a docmap row keeps its
-        number."""
+        """docid → name, for the docids with a docmap row."""
         pos = np.searchsorted(self.docids, docids)
         return {
             d: self.names[p]
-            if p < len(self.docids) and self.docids[p] == d
-            else str(d)
             for d, p in zip(docids, pos)
+            if p < len(self.docids) and self.docids[p] == d
         }
 
 
@@ -1135,10 +1135,12 @@ class SearchEngine:
         (search_engine.c:52-55) is chosen from the index's size, not
         by a flag: an index of at most :data:`RESIDENT_MAX_POSTINGS`
         tokens is held on the driver (:class:`_Resident`), loaded by
-        the first query placed there. A larger one stays on storage,
-        where the pushed-down term ``isin`` filter prunes
-        parquet/Iceberg files per query — at 10^12 docs the postings
-        table fits in no memory.
+        its first query or name lookup, and every untrimmed batch of
+        the grouped scorer is scored there without a Spark job (see
+        :meth:`_search_grouped`). A larger one stays on storage and
+        every batch runs distributed, where the pushed-down term
+        ``isin`` filter prunes parquet/Iceberg files per query — at
+        10^12 docs the postings table fits in no memory.
 
         ``stemmer="auto"`` follows the index's recorded ``~stemmer``
         (memory_index.c:1487-1521); passing an explicit stemmer that
@@ -1319,11 +1321,11 @@ class SearchEngine:
         applies the single-term prune unconditionally — here it is
         opt-in so the default path stays exact-evaluation.
 
-        A batch whose postings scan is small enough is scored in the
-        driver and comes back as a driver-local frame (no Spark job on
-        a resident index, one otherwise, run here); larger batches
-        return a lazy distributed plan — see :meth:`_search_grouped`.
-        A batch with no terms costs no job.
+        On a resident index an untrimmed batch is scored in the driver
+        and comes back as a driver-local frame, with no Spark job once
+        the index is loaded; any other batch returns a lazy
+        distributed plan — see :meth:`_search_grouped`. A batch with
+        no terms costs no job.
         """
         res = self._search(
             queries, k, ranker, conjunctive, parsed_terms,
@@ -1336,18 +1338,30 @@ class SearchEngine:
     ) -> pd.DataFrame:
         """:meth:`search_batch`'s rows as a driver pandas frame, ordered
         by (query_id, rank), for a caller that reads them itself (the
-        server). A batch scored on the driver skips the Spark local
-        frame; any other result is collected."""
+        server). A batch scored on the driver (a resident index) skips
+        the Spark local frame; a distributed result is collected."""
         res = self._search(queries, k, ranker)
         if isinstance(res, DataFrame):
             res = pd.DataFrame.from_records(res.collect(), columns=_RESULT_ARROW.names)
         return res
 
-    def resident_names(self, docids: list[int]) -> dict[int, str] | None:
-        """docid → ``conv_id:turn_idx`` from the resident docmap (no
-        Spark job once loaded), or None above the resident cap."""
+    def names(self, docids: list[int]) -> dict[int, str]:
+        """docid → document name (``conv_id:turn_idx``; the reference
+        reads its doclist file, ours is the docmap). A resident index
+        answers from the driver, with no Spark job once loaded; any
+        other index reads the docids' docmap rows in one job. A docid
+        without a docmap row is named by its number."""
         res = self._resident()
-        return None if res is None else res.names_of(docids)
+        if res is not None:
+            found = res.names_of(docids)
+        else:
+            rows = (
+                self.index.docmap.filter(F.col("docid").isin(docids))
+                .select("docid", _doc_name())
+                .collect()
+            )
+            found = {r["docid"]: r["name"] for r in rows}
+        return {d: found.get(d, str(d)) for d in docids}
 
     def _resident(self) -> _Resident | None:
         """The resident index, loaded by its first caller (once, also
@@ -2016,31 +2030,29 @@ class SearchEngine:
         term_aux: dict | None = None,
     ) -> pd.DataFrame | DataFrame:
         """The grouped scorer (:func:`_grouped_topk`) in one of two
-        placements, chosen without a Spark job:
+        placements, chosen from the index, not the batch:
 
-        - **Driver** — the batch's pushed-filter scan can hold at most
-          :data:`COLLECT_MAX_POSTINGS` postings (Σ df over the
-          distinct terms ≤ terms × N bounds its rows and bytes). The
-          matched rows are scored in the driver process, where the
-          scorer sees every one and so emits the exact top-k, returned
-          as a ranked pandas frame. The rows come from the resident
-          table (:meth:`_resident`, no Spark job) or, above its cap,
-          from the scan collected as Arrow in one JVM-only job. This
-          is the reference's in-RAM term-at-a-time search, and it
-          costs neither a Python worker nor a shuffle.
-        - **Distributed** — above the cap (or with read-side trims,
-          whose per-term prefix sums run distributed, see
-          :meth:`_with_trim_cum`): partition by seg_group so every
-          docid's full accumulation completes inside one task, emit
-          only the per-partition top-k candidates per query, then rank
-          them with :meth:`_rank_topk`. Segments of *all* terms for a
-          given docid share its seg_group (the group is a pure
-          function of the docid block), so a hash repartition on
-          seg_group co-locates everything a docid needs — the
-          reference's accumulator array sliced into disjoint docid
-          ranges, one per task. Shuffle volume is the handful of
-          matching compressed segments + k·queries candidate rows per
-          partition, never one row per posting.
+        - **Driver** — the index is resident (:meth:`_resident`) and
+          the batch has no read-side trims. The matched rows come from
+          the resident table and are scored in the driver process,
+          where the scorer sees every one and so emits the exact
+          top-k, returned as a ranked pandas frame. This is the
+          reference's in-RAM term-at-a-time search, and once the table
+          is loaded it costs no Spark job.
+        - **Distributed** — every other batch (an index above the
+          resident cap, or read-side trims, whose per-term prefix sums
+          run distributed, see :meth:`_with_trim_cum`): partition by
+          seg_group so every docid's full accumulation completes
+          inside one task, emit only the per-partition top-k
+          candidates per query, then rank them with
+          :meth:`_rank_topk`. Segments of *all* terms for a given
+          docid share its seg_group (the group is a pure function of
+          the docid block), so a hash repartition on seg_group
+          co-locates everything a docid needs — the reference's
+          accumulator array sliced into disjoint docid ranges, one per
+          task. Shuffle volume is the handful of matching compressed
+          segments + k·queries candidate rows per partition, never one
+          row per posting.
         """
         score = functools.partial(
             _grouped_topk,
@@ -2050,10 +2062,9 @@ class SearchEngine:
             mean_len=self.mean_doc_len, coll_len=self.collection_len,
             quantized=self.quantized, codec=self.codec,
         )
-        if not trim_for and len(qmap) * self.n_docs <= COLLECT_MAX_POSTINGS:
-            res = self._resident()
-            rows = hits.toArrow().to_pandas() if res is None else res.rows(list(qmap))
-            return _rank_local(next(score([rows]), None), k)
+        res = None if trim_for else self._resident()
+        if res is not None:
+            return _rank_local(next(score([res.rows(list(qmap))]), None), k)
         # the seg_group repartition co-locates every segment a docid's
         # accumulation needs — but a docid only spans MULTIPLE matched
         # rows when its query has ≥2 distinct terms (the build merges a
@@ -2541,8 +2552,11 @@ class SearchEngine:
         (θ₀ = 0 — exact either way), so rank identity holds
         unconditionally. Requires a quantized index (the reference
         likewise restricts quantum processing to baked-in scores,
-        atire_api.c:472-478).
+        atire_api.c:472-478). Query ids must be non-negative: the
+        scorer's per-partition stats rows use ``query_id -1``.
         """
+        if any(qid < 0 for qid, _ in queries):
+            raise ValueError("search_wand needs non-negative query ids")
         if not self.quantized:
             raise ValueError(
                 "block-max WAND needs a quantized index: max_impact "
@@ -3592,7 +3606,6 @@ class SearchEngine:
         k: int = 10,
         similarity: str | None = None,
         value: float = 0.0,
-        class_collect_max: int = 10_000,
     ) -> DataFrame:
         """Query-side stemming over an UNSTEMMED index — the
         reference's stemmer-iterator search (atire_api.c:843-930
@@ -3628,7 +3641,7 @@ class SearchEngine:
         The similarity gates run distributed either way
         (:meth:`_pairwise_similarity` — per-pair co-located fold, no
         postings ever collect to the driver). Class-member routing is
-        two-path on ``class_collect_max``: when the matched classes
+        two-path on :data:`CLASS_COLLECT_MAX`: when the matched classes
         are query-bounded (≤ the cap) they collect like the
         reference's iterator and the member terms push down as an In
         filter (parquet file pruning); a larger class population —
@@ -3695,8 +3708,8 @@ class SearchEngine:
                 # one probe job doubles as the collect: take(cap+1)
                 # either returns the COMPLETE class set (≤ cap rows —
                 # the normal query case) or proves it exceeds the cap
-                head = cdf.take(class_collect_max + 1)
-                if len(head) > class_collect_max:
+                head = cdf.take(CLASS_COLLECT_MAX + 1)
+                if len(head) > CLASS_COLLECT_MAX:
                     overflow = True
                 else:
                     if len(self._class_member_cache) > 65536:
@@ -3712,7 +3725,7 @@ class SearchEngine:
                 }
                 overflow = (
                     sum(len(ts) for ts in classes.values())
-                    > class_collect_max
+                    > CLASS_COLLECT_MAX
                 )
         if not overflow:
             return self._stemmed_iter_collected(
@@ -3730,7 +3743,7 @@ class SearchEngine:
         self, gated, classes, k, similarity, value
     ) -> DataFrame:
         """Query-bounded classes: ``classes`` maps base → sorted
-        (btree-order) member list (≤ class_collect_max total), gated
+        (btree-order) member list (≤ CLASS_COLLECT_MAX total), gated
         with driver logic, member list pushed down as an In filter —
         the fast path for real queries."""
         groups: dict[tuple[int, int], tuple[int, list[tuple[str, float]]]] = {}
@@ -3790,7 +3803,7 @@ class SearchEngine:
     def _stemmed_iter_distributed(
         self, gated, classes_df, k, similarity, value
     ) -> DataFrame:
-        """Web-scale classes (> class_collect_max members): everything
+        """Web-scale classes (> CLASS_COLLECT_MAX members): everything
         stays a DataFrame — members come from the classes join, the
         similarity gate filters in SQL (Spark's NaN > any-number
         semantics keep NaN sims exactly like the reference's

@@ -31,28 +31,19 @@ surface is a thin threaded wrapper (:func:`serve_tcp`). A long-running
 server holds one warm SparkSession + SearchEngine — the deployment
 shape is one protocol frontend per cluster, queries fanned to
 executors by the engine itself, exactly how the reference pairs one
-``atire`` process with its in-RAM index. A small index is held
-resident on the driver (the reference's ``-M``), where a request runs
-no Spark job: the engine hands back the ranked rows and the names.
+``atire`` process with its in-RAM index. A request takes its ranked
+rows and its hits' names straight from the engine: on an index
+resident on the driver (the reference's ``-M``) it runs no Spark job;
+on a larger one it runs the distributed search plus one docmap job
+for the page's names.
 """
 
 from __future__ import annotations
 
 import re
 import time
-from collections import OrderedDict
-from functools import reduce
-
-from pyspark.sql import functions as F
 
 __all__ = ["AtireProtocol", "serve_tcp"]
-
-# Above the engine's resident cap, result names are cached per block
-# of 2^NAME_BLOCK_BITS consecutive docids, at most NAME_CACHE_BLOCKS
-# blocks (least recently used out): a shard's hits fall in a few
-# blocks, so a warm server resolves a page's names without a Spark job.
-NAME_BLOCK_BITS = 10
-NAME_CACHE_BLOCKS = 64
 
 
 def _between(text: str, open_tag: str, close_tag: str) -> str | None:
@@ -91,50 +82,6 @@ class AtireProtocol:
         self.doclist_filename = doclist_filename
         self.results_list_length = results_list_length
         self.closed = False
-        # docid block → {docid: document name}, an LRU of docmap
-        # blocks for an engine without a resident docmap (the
-        # reference reads names from its doclist file; ours live in
-        # the docmap)
-        self._name_blocks: OrderedDict[int, dict[int, str]] = OrderedDict()
-
-    # ------------------------------------------------------------- names
-    def _names_for(self, docids: list[int]) -> dict[int, str]:
-        """Names of a result page's docids: blocks already cached cost
-        nothing, the missing ones are read in one docmap job."""
-        blocks = {d >> NAME_BLOCK_BITS for d in docids}
-        found: dict[int, dict[int, str]] = {}
-        for b in blocks & self._name_blocks.keys():
-            self._name_blocks.move_to_end(b)
-            found[b] = self._name_blocks[b]
-        missing = sorted(blocks - found.keys())
-        if missing:
-            in_missing = reduce(
-                lambda a, c: a | c,
-                (
-                    F.col("docid").between(
-                        b << NAME_BLOCK_BITS, ((b + 1) << NAME_BLOCK_BITS) - 1
-                    )
-                    for b in missing
-                ),
-            )
-            rows = (
-                self.engine.index.docmap.filter(in_missing)
-                .select("docid", "conv_id", "turn_idx")
-                .collect()
-            )
-            fetched: dict[int, dict[int, str]] = {b: {} for b in missing}
-            for r in rows:
-                d = int(r["docid"])
-                fetched[d >> NAME_BLOCK_BITS][d] = (
-                    f"{r['conv_id']}:{int(r['turn_idx'])}"
-                )
-            found.update(fetched)
-            self._name_blocks.update(fetched)
-            while len(self._name_blocks) > NAME_CACHE_BLOCKS:
-                self._name_blocks.popitem(last=False)
-        return {
-            d: found[d >> NAME_BLOCK_BITS].get(d, str(d)) for d in docids
-        }
 
     def _fetch_text(self, docid: int) -> str | None:
         if self.docstore is None:
@@ -176,9 +123,7 @@ class AtireProtocol:
         page = ranked.iloc[lo:hi]
         if len(page):
             ids = [int(d) for d in page["docid"]]
-            names = self.engine.resident_names(ids)
-            if names is None:
-                names = self._names_for(ids)
+            names = self.engine.names(ids)
             out.append("<hits>")
             for d, rank, rsv in zip(ids, page["rank"], page["rsv"]):
                 out.append(

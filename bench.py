@@ -246,9 +246,10 @@ def main() -> None:
         build8 = {"error": str(exc)}
 
     if hasattr(os, "sched_setaffinity") and cpus < (os.cpu_count() or cpus):
-        # same affinity discipline as scaling_bench.py: a local[N]
-        # JVM on a wider host would run GC/netty/shuffle threads on
-        # extra cores, inflating the measured throughput for small N
+        # pin the process to N cores (the discipline of the scaling
+        # runs recorded in BENCH.md): a local[N] JVM on a wider host
+        # would run GC/netty/shuffle threads on extra cores, inflating
+        # the measured throughput for small N
         os.sched_setaffinity(0, set(range(cpus)))
 
     spark = get_spark(cpus=cpus, app="atire_spark_bench")

@@ -8,15 +8,14 @@ still runs at 10^12 turns:
   filter (storage skips files by parquet/Iceberg min-max stats, the
   round-2 structural fix — without it every query reads the whole
   postings table);
-- in the distributed placement (batches above the collect cap, forced
-  here by setting the cap to 0) top-k is bounded on BOTH sides of the
-  final exchange
+- in the distributed placement (an index above the resident cap,
+  forced here by setting the cap to 0) top-k is bounded on BOTH sides
+  of the final exchange
   (``WindowGroupLimit``: partition-local heads, then the merged head —
   the shuffle carries k·queries rows, not every scored doc);
-- a serving-sized BM25 batch on an index that is not resident (the
-  collected scan, forced here by setting the resident cap to 0) is ONE
-  Spark job: the pushed-filter postings scan, collected as Arrow, with
-  no Python worker in it; a query with no terms is no job at all;
+- a BM25 batch on a warm resident index is no Spark job and no
+  postings scan: its rows come from the driver-resident table; a
+  query with no terms is no job at all;
 - no join in any fan-out path degenerates to ``CartesianProduct``;
 - the brute-force kNN baseline broadcasts the (tiny) query side, never
   the collection;
@@ -66,44 +65,28 @@ def engine(spark, tmp_path_factory):
 
 
 @pytest.fixture
-def per_query_scan(monkeypatch):
-    """No index is resident on the driver: a driver-placed batch reads
-    its pushed-filter postings scan."""
+def distributed(monkeypatch):
+    """search_batch's distributed placement: with a resident cap of 0
+    no index is held on the driver."""
     monkeypatch.setattr(query_mod, "RESIDENT_MAX_POSTINGS", 0)
 
 
-@pytest.fixture
-def distributed(per_query_scan, monkeypatch):
-    """search_batch's distributed placement: with a collect cap of 0
-    no batch is collected to the driver."""
-    monkeypatch.setattr(query_mod, "COLLECT_MAX_POSTINGS", 0)
-
-
-@pytest.mark.usefixtures("per_query_scan")
 class TestCollectedSearchPlan:
-    def test_one_jvm_job_with_pushed_filter(self, engine, jobs_of, monkeypatch):
-        """Below the cap a batch costs exactly one Spark job: the
-        postings scan with the term filter pushed to parquet, collected
-        as Arrow — no Python UDF, no exchange — and a driver-local
-        result that collects without another job."""
-        frame_cls = type(engine.postings)
-        plans = []
-        to_arrow = frame_cls.toArrow
+    """The driver placement: a batch scored off the index collected
+    to the driver once (the resident table)."""
 
-        def spy(df):
-            plans.append(plan_of(df))
-            return to_arrow(df)
-
-        monkeypatch.setattr(frame_cls, "toArrow", spy)
-        rows, n_jobs = jobs_of(
-            lambda: engine.search_batch([(1, "alpha beta"), (2, "gamma")]).collect()
-        )
-        assert rows and n_jobs == 1
-        assert len(plans) == 1
-        scan = plans[0]
-        assert "PushedFilters: [In(term, " in scan, scan
-        assert "MapInPandas" not in scan and "Python" not in scan, scan
-        assert "Exchange" not in scan, scan
+    def test_warm_resident_batch_runs_no_job_or_scan(self, engine, jobs_of):
+        """A warm resident engine answers a batch with no Spark job,
+        and its result is a driver-local frame: no postings scan, no
+        Python UDF, no exchange in the plan."""
+        batch = [(1, "alpha beta"), (2, "gamma")]
+        engine.search_batch(batch).collect()  # loads the resident table
+        rows, n_jobs = jobs_of(lambda: engine.search_batch(batch).collect())
+        assert rows and n_jobs == 0
+        p = plan_of(engine.search_batch(batch))
+        assert "LocalTableScan" in p, p
+        assert "postings" not in p and "Scan parquet" not in p, p
+        assert "MapInPandas" not in p and "Exchange" not in p, p
 
     def test_query_without_terms_costs_no_job(self, engine, jobs_of):
         rows, n_jobs = jobs_of(lambda: engine.search_batch([(1, "")]).collect())

@@ -104,8 +104,8 @@ class TestProtocol:
 
     def test_resident_request_runs_no_job(self, proto, jobs_of, monkeypatch):
         """A warm resident engine answers a request, names included,
-        without a Spark job, and its reply is the one the per-query
-        scan and the docmap name blocks give."""
+        without a Spark job, and its reply is the one the distributed
+        placement and the docmap's names give."""
         import atire_spark.query as query_mod
 
         q = "<ATIREsearch><query>alpha bravo</query><n>8</n></ATIREsearch>"
@@ -114,9 +114,9 @@ class TestProtocol:
         assert n_jobs == 0
         assert sum(ln.startswith("<hit>") for ln in lines) == 8
         monkeypatch.setattr(query_mod, "RESIDENT_MAX_POSTINGS", 0)
-        scanned = AtireProtocol(proto.engine).handle_line(q)
-        assert scanned[2:] == lines[2:]
-        assert scanned[1].split("<time>")[0] == lines[1].split("<time>")[0]
+        distributed = AtireProtocol(proto.engine).handle_line(q)
+        assert distributed[2:] == lines[2:]
+        assert distributed[1].split("<time>")[0] == lines[1].split("<time>")[0]
 
     def test_bad_ranker_error(self, proto):
         lines = proto.handle_line(
@@ -138,8 +138,8 @@ class TestProtocol:
             "</ATIREsearch>",
         ]
         assert n_jobs == 0
-        # a valid ranker is checked without a search of its own: with
-        # its names cached, a request costs the jobs of its one search
+        # a valid ranker is checked without a search of its own: a
+        # request costs the jobs of its one search
         ok = "<ATIREsearch><query>bravo</query><ranking>termcount</ranking></ATIREsearch>"
         first = proto.handle_line(ok)
         again, n_jobs = jobs_of(lambda: proto.handle_line(ok))
@@ -151,29 +151,18 @@ class TestProtocol:
         )
         assert n_jobs == search_jobs
 
-    def test_names_resolve_from_cached_blocks(self, proto, jobs_of, monkeypatch):
-        """Hit names come from an LRU of docid blocks: a page whose
-        blocks are cached costs no job, a page spanning more blocks
-        than the cache holds still names every hit, and the cache
-        never holds more than its block count."""
-        import atire_spark.server as server_mod
+    def test_names_above_resident_cap_cost_one_job(
+        self, proto, jobs_of, monkeypatch
+    ):
+        """Above the resident cap a page's names are one docmap job;
+        a docid without a docmap row is named by its number."""
+        import atire_spark.query as query_mod
 
-        monkeypatch.setattr(server_mod, "NAME_BLOCK_BITS", 2)
-        monkeypatch.setattr(server_mod, "NAME_CACHE_BLOCKS", 2)
-        p = AtireProtocol(proto.engine)
-        want = {
-            int(r["docid"]): f"{r['conv_id']}:{int(r['turn_idx'])}"
-            for r in proto.engine.index.docmap.collect()
-        }
-        names, n_jobs = jobs_of(lambda: p._names_for([0, 5, 10]))  # 3 blocks
+        monkeypatch.setattr(query_mod, "RESIDENT_MAX_POSTINGS", 0)
+        r = proto.engine.index.docmap.filter("docid = 5").collect()[0]
+        names, n_jobs = jobs_of(lambda: proto.engine.names([5, 99]))
         assert n_jobs == 1
-        assert names == {0: want[0], 5: want[5], 10: want[10]}
-        assert list(p._name_blocks) == [1, 2]
-        again, n_jobs = jobs_of(lambda: p._names_for([5, 10, 11]))
-        assert n_jobs == 0
-        assert again == {5: want[5], 10: want[10], 11: want[11]}
-        # a docid without a docmap row keeps its number as its name
-        assert p._names_for([99]) == {99: "99"}
+        assert names == {5: f"{r['conv_id']}:{int(r['turn_idx'])}", 99: "99"}
 
     def test_getdoc_without_store(self, proto):
         lines = proto.handle_line("<ATIREgetdoc><docid>3</docid>")

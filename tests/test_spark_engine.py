@@ -38,17 +38,14 @@ def small_oracle(small_pdf):
     return OracleIndex.build(small_pdf)
 
 
-@pytest.fixture(params=["resident", "collected", "distributed"])
+@pytest.fixture(params=["resident", "distributed"])
 def placement(request, monkeypatch):
-    """Run a test on each row source and placement of search_batch's
-    grouped scorer: by default these corpora are resident on the driver
-    and every batch is scored there; a resident cap of 0 scores the
-    collected pushed-filter scan instead; a collect cap of 0 as well
-    sends every batch down the distributed path."""
-    if request.param != "resident":
-        monkeypatch.setattr(query_mod, "RESIDENT_MAX_POSTINGS", 0)
+    """Run a test on each placement of search_batch's grouped scorer:
+    by default these corpora are resident on the driver and every
+    batch is scored there; a resident cap of 0 sends every batch down
+    the distributed path."""
     if request.param == "distributed":
-        monkeypatch.setattr(query_mod, "COLLECT_MAX_POSTINGS", 0)
+        monkeypatch.setattr(query_mod, "RESIDENT_MAX_POSTINGS", 0)
     return request.param
 
 
@@ -57,12 +54,7 @@ def _placement_of(df) -> str:
     if "MapInPandas" in plan:
         return "distributed"
     assert "LocalTableScan" in plan, plan
-    return "driver"  # from the resident table or the collected scan
-
-
-def _assert_placement(df, placement: str) -> None:
-    want = "distributed" if placement == "distributed" else "driver"
-    assert _placement_of(df) == want
+    return "resident"
 
 
 def _assert_ranked(got: pd.DataFrame, qid: int, want: pd.DataFrame, q: str):
@@ -252,12 +244,12 @@ class TestRankIdentity:
     def test_placements_match_oracle(
         self, small_engine, small_oracle, placement
     ):
-        """The collected (driver-scored) and the distributed
+        """The resident (driver-scored) and the distributed
         (seg_group-partitioned) placements of the grouped scorer both
         agree with the oracle."""
         batch = [(1, "alpha 00001"), (2, "omegaterm"), (3, "capterm 00001")]
         df = small_engine.search_batch(batch, k=15)
-        _assert_placement(df, placement)
+        assert _placement_of(df) == placement
         a = df.toPandas()
         for qid, qtext in batch:
             w = small_oracle.search(qtext, k=15)
@@ -271,8 +263,8 @@ class TestRankIdentity:
         """Multi-term, repeated-term and absent-term queries in one
         batch, plus conjunctive, lmds and docid_desc batches, rank
         identically to expectations built from the oracle's postings,
-        on every row source and placement; a warm resident engine
-        answers without a Spark job."""
+        in both placements; a warm resident engine answers without a
+        Spark job."""
         k = 12
         batch = [
             (1, "alpha bravo 00001"),
@@ -283,11 +275,9 @@ class TestRankIdentity:
         ]
         small_engine.search_batch(batch, k=k)  # warm: loads a resident table
         df, n_jobs = jobs_of(lambda: small_engine.search_batch(batch, k=k))
-        _assert_placement(df, placement)
-        if placement != "distributed":
-            # the resident table answers without a job, the collected
-            # scan in one
-            assert n_jobs == (0 if placement == "resident" else 1)
+        assert _placement_of(df) == placement
+        if placement == "resident":
+            assert n_jobs == 0
         got = df.toPandas()
         for qid, qtext in batch:
             _assert_ranked(got, qid, small_oracle.search(qtext, k=k), qtext)
@@ -306,6 +296,32 @@ class TestRankIdentity:
         got = small_engine.search_batch(dd, k=k, ranker="docid_desc").toPandas()
         for qid, qtext in dd:
             _assert_ranked(got, qid, _docid_desc(small_oracle, qtext, k), qtext)
+
+    def test_resident_index_scores_any_batch_on_the_driver(
+        self, small_engine, small_oracle, jobs_of
+    ):
+        """The placement follows the index, not the batch: a resident
+        engine scores a batch whose distinct terms × N exceed 2^20 on
+        the driver, without a Spark job, ranked like the oracle."""
+        pads = [f"zz{chr(97 + i // 26)}{chr(97 + i % 26)}" for i in range(120)]
+        assert not set(pads) & set(small_oracle.postings)
+        batch = [
+            (1, "alpha bravo 00001"),
+            (2, "capterm omegaterm " + " ".join(pads[:20])),
+            (3, " ".join(pads)),
+        ]
+        distinct = {t for _, q in batch for t in _terms(q)}
+        assert len(distinct) * small_engine.n_docs > 1 << 20
+        small_engine.search_batch(batch, k=10)  # warm: loads a resident table
+
+        def search():
+            df = small_engine.search_batch(batch, k=10)
+            return df, pd.DataFrame.from_records(df.collect(), columns=df.columns)
+
+        (df, got), n_jobs = jobs_of(search)
+        assert n_jobs == 0 and _placement_of(df) == "resident"
+        for qid, qtext in batch:
+            _assert_ranked(got, qid, small_oracle.search(qtext, k=10), qtext)
 
     def test_resident_index_loads_once_under_concurrent_first_queries(
         self, spark, small_engine, monkeypatch
@@ -769,6 +785,12 @@ class TestBlockMaxWand:
     def test_unquantized_rejected(self, small_engine):
         with pytest.raises(ValueError, match="quantized"):
             small_engine.search_wand([(1, "alpha")])
+
+    def test_negative_query_id_rejected(self, wand_engine):
+        """The scorer's stats rows use query_id -1, so a negative query
+        id is refused instead of silently dropped from the results."""
+        with pytest.raises(ValueError, match="non-negative"):
+            wand_engine.search_wand([(1, "alpha"), (-1, "bravo")])
 
     def test_return_stats_releases_cached_candidates(self, spark, wand_engine):
         """search_wand and search_qaat cache their candidates for the

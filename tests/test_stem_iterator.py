@@ -15,6 +15,8 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from atire_spark import query as query_mod
+
 # cat/cats and dog/dogs are genuine stem classes under the S-stripper
 # (both prefix-bounded); "cats" co-occurs with "cat" at different
 # rates per doc so the postings-cosine is nontrivial
@@ -195,7 +197,7 @@ def test_term_similarity_reference_quirks():
 
 
 class TestDistributedPath:
-    """The web-scale member path (class_collect_max exceeded): members
+    """The web-scale member path (CLASS_COLLECT_MAX exceeded): members
     stay a DataFrame and reach the postings through joins. The two
     paths must return identical rankings, and the distributed plan
     must contain no In-literal over the vocabulary."""
@@ -205,25 +207,29 @@ class TestDistributedPath:
         [(None, 0.0), ("threshold", 0.1), ("weighted", 2.0)],
     )
     def test_distributed_equals_collected(
-        self, spark, iter_engine, similarity, value
+        self, spark, iter_engine, similarity, value, monkeypatch
     ):
         qs = [(1, "cat dog"), (2, "cats barking one"), (3, "zz")]
         small = iter_engine.search_stemmed_iterator(
             qs, stemmer="s", k=10, similarity=similarity, value=value
         ).toPandas()
+        # force the distributed member path
+        monkeypatch.setattr(query_mod, "CLASS_COLLECT_MAX", 0)
         big = iter_engine.search_stemmed_iterator(
-            qs, stemmer="s", k=10, similarity=similarity, value=value,
-            class_collect_max=0,  # force the distributed member path
+            qs, stemmer="s", k=10, similarity=similarity, value=value
         ).toPandas()
         pd.testing.assert_frame_equal(
             small.reset_index(drop=True), big.reset_index(drop=True)
         )
 
-    def test_distributed_plan_has_no_vocab_literal(self, spark, iter_engine):
+    def test_distributed_plan_has_no_vocab_literal(
+        self, spark, iter_engine, monkeypatch
+    ):
         """The forced-distributed plan filters postings via joins, not
         via an In(term, [...]) literal of collected class members."""
+        monkeypatch.setattr(query_mod, "CLASS_COLLECT_MAX", 0)
         df = iter_engine.search_stemmed_iterator(
-            [(1, "cat dog")], stemmer="s", k=5, class_collect_max=0
+            [(1, "cat dog")], stemmer="s", k=5
         )
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "cats" not in plan  # no collected member inlined

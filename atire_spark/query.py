@@ -13,10 +13,12 @@ read + partial decompress postings           vectorized vbyte decode per
 per-impact-group score computed once,        group_contrib kernel per
 add_rsv per docid                            (segment, impact group)
 (ranking_function_bm25.c:111-128)
-uint16 fixed-point accumulator array         numpy groupby(query_id,
-(search_engine_accumulator.h:76)             docid).sum(contrib) % 65536
-top-k heap + partial sort, tie larger        exact per-query top-k, rsv
-docid first (search_engine_accumulator.h)    desc, docid desc → rank <= k
+uint16 fixed-point accumulator array         per query: sort by docid,
+(search_engine_accumulator.h:76)             np.add.reduceat(contrib),
+                                             signed 16-bit view
+top-k heap + partial sort, tie larger        np.partition to the k-th
+docid first (search_engine_accumulator.h)    value, then lexsort (rsv
+                                             desc, docid desc) → rank <= k
 
 The grouped scorer runs in one of two placements, a property of the
 index (see SearchEngine._search_grouped). An index of at most
@@ -38,7 +40,8 @@ from __future__ import annotations
 import functools
 import re
 import threading
-from collections import Counter
+from collections import Counter, namedtuple
+from itertools import repeat
 from typing import Iterator
 
 import numpy as np
@@ -92,6 +95,22 @@ def _doc_name():
     return F.concat_ws(":", "conv_id", F.col("turn_idx").cast("string")).alias("name")
 
 
+# the postings columns a scorer reads from a matched segment row
+_SEG_FIELDS = (
+    "term", "df", "cf", "impacts", "doc_counts", "byte_offsets", "postings", "doc_lens"
+)
+_Seg = namedtuple("_Seg", _SEG_FIELDS + ("cum_before",))
+
+
+def _seg_rows(batch, cum_before: bool = False) -> Iterator[_Seg]:
+    """The segment rows of a pandas batch or an Arrow table, read by
+    column. ``cum_before`` (see :meth:`SearchEngine._with_trim_cum`)
+    is read only when asked for, else None."""
+    cols = [batch[c].to_numpy() for c in _SEG_FIELDS]
+    cols.append(batch["cum_before"].to_numpy() if cum_before else repeat(None, len(batch)))
+    return map(_Seg._make, zip(*cols))
+
+
 class _Resident:
     """The reference's ``-M`` in-memory index (search_engine.c:52-55)
     on the driver, the only row source of a driver-placed batch: the
@@ -106,13 +125,13 @@ class _Resident:
         self.docids = names["docid"].to_numpy()
         self.names = names["name"].to_numpy()
 
-    def rows(self, terms: list[str]) -> pd.DataFrame:
+    def rows(self, terms: list[str]) -> pa.Table:
         """The postings rows of ``terms``: what
-        ``postings.filter(term isin terms)`` returns."""
+        ``postings.filter(term isin terms)`` returns, as Arrow."""
         lo = np.searchsorted(self.terms, terms, side="left")
         hi = np.searchsorted(self.terms, terms, side="right")
         take = np.concatenate([np.arange(a, b) for a, b in zip(lo, hi)])
-        return self.postings.take(take).to_pandas()
+        return self.postings.select(_SEG_FIELDS).take(take)
 
     def names_of(self, docids: list[int]) -> dict[int, str]:
         """docid → name, for the docids with a docmap row."""
@@ -128,7 +147,10 @@ def _local_result(spark: SparkSession, ranked: pd.DataFrame | None = None) -> Da
     """A RESULT_SCHEMA frame held on the driver (``None`` → empty).
     Built from an Arrow table, so it plans as a LocalTableScan and
     collects without a Spark job; a Python list or an empty pandas
-    frame would go through ``parallelize`` and cost one."""
+    frame would go through ``parallelize`` and cost one. Read with
+    ``toPandas()`` it still costs one job (Spark's Arrow collect
+    path); a caller that wants the rows in pandas should use
+    :meth:`SearchEngine.search_ranked`."""
     if ranked is None:
         return spark.createDataFrame(_RESULT_ARROW.empty_table())
     return spark.createDataFrame(
@@ -136,19 +158,28 @@ def _local_result(spark: SparkSession, ranked: pd.DataFrame | None = None) -> Da
     )
 
 
-def _rank_local(cand: pd.DataFrame | None, k: int) -> pd.DataFrame:
-    """:meth:`SearchEngine._rank_topk` on a driver-side candidate frame:
+def _rank_local(cand: pd.DataFrame, k: int) -> pd.DataFrame:
+    """:meth:`SearchEngine._rank_topk` on the driver placement's
+    candidates (at most k per query, see :func:`_grouped_topk`):
     rsv_fixed desc, tie larger-docid-first, rank <= k, ordered by
-    (query_id, rank). No candidates (``None``) → an empty frame."""
-    if cand is None:
-        return _RESULT_ARROW.empty_table().to_pandas()
-    out = cand.sort_values(
-        ["query_id", "rsv_fixed", "docid"], ascending=[True, False, False]
+    (query_id, rank), in one lexsort."""
+    q, d, r = (cand[c].to_numpy(np.int64) for c in ("query_id", "docid", "rsv_fixed"))
+    order = np.lexsort((-d, -r, q))
+    q, d, r = q[order], d[order], r[order]
+    pos = np.arange(q.size)
+    first = np.ones(q.size, dtype=bool)
+    first[1:] = q[1:] != q[:-1]
+    rank = pos - np.maximum.accumulate(np.where(first, pos, 0)) + 1
+    keep = rank <= k
+    return pd.DataFrame(
+        {
+            "query_id": q[keep],
+            "rank": rank[keep],
+            "docid": d[keep],
+            "rsv_fixed": r[keep],
+            "rsv": r[keep] / 100.0,
+        }
     )
-    out = out.assign(
-        rank=out.groupby("query_id").cumcount() + 1, rsv=out["rsv_fixed"] / 100.0
-    )
-    return out[out["rank"] <= k][_RESULT_ARROW.names]
 
 
 LMD_U = 6750.0  # ranking_function_lmd.h:10
@@ -451,7 +482,7 @@ def _segment_contrib(
     return "float", docids, rsv
 
 
-def _zero_rsv_rework(acc, first_mask: np.ndarray) -> None:
+def _zero_rsv_rework(contrib, nz, unit, unit_p, weight, first) -> None:
     """Exact ``is_zero_rsv`` emulation for the prior-carrying LM
     rankers (lmds / lmp / lmptfidf).
 
@@ -460,57 +491,134 @@ def _zero_rsv_rework(acc, first_mask: np.ndarray) -> None:
     ACCUMULATOR, not a first-hit flag). When a contribution truncates
     to zero the accumulator stays at zero, so the prior REFIRES on the
     next occurrence; and an interior prefix wrapping to exactly zero
-    refires it too. Detect the (rare) groups the fold cannot represent
+    refires it too. Detect the (rare) docs the fold cannot represent
     and replay them occurrence-by-occurrence, patching ``contrib`` and
-    ``nz`` in place so the downstream group-sum stays unchanged.
+    ``nz`` in place so the downstream per-doc sum stays unchanged.
 
-    ``acc`` must be sorted by (query_id, docid, term-order) and carry
-    int64 columns contrib (folded, adj applied), nz, unit, unit_p,
-    weight; ``first_mask`` marks each group's first row.
+    The arrays are one query's rows sorted by (docid, term order):
+    ``contrib`` folded (see :func:`_fold_prior`), ``first`` marks each
+    doc's first row.
     """
-    from atire_spark.kernels.bm25 import ACCUM_MOD as _MOD
-
-    n = len(acc)
+    n = contrib.size
     if n == 0:
         return
-    c = acc["contrib"].to_numpy()
-    unit = acc["unit"].to_numpy()
-    unit_p = acc["unit_p"].to_numpy()
-    weight = acc["weight"].to_numpy()
-    # prefix sum BEFORE each row, restarting per group
-    cs = np.cumsum(c)
-    grp_id = np.cumsum(first_mask) - 1  # 0-based group index per row
-    first_idx = np.flatnonzero(first_mask)
-    base = (cs[first_idx] - c[first_idx])[grp_id]
-    prefix_before = cs - c - base
+    # prefix sum BEFORE each row, restarting per doc
+    cs = np.cumsum(contrib)
+    grp_id = np.cumsum(first) - 1  # 0-based doc index per row
+    first_idx = np.flatnonzero(first)
+    base = (cs[first_idx] - contrib[first_idx])[grp_id]
+    prefix_before = cs - contrib - base
     flagged_rows = (
-        (unit % _MOD == 0)
-        | (unit_p % _MOD == 0)
-        | ((prefix_before % _MOD == 0) & ~first_mask)
+        (unit % ACCUM_MOD == 0)
+        | (unit_p % ACCUM_MOD == 0)
+        | ((prefix_before % ACCUM_MOD == 0) & ~first)
     )
     if not flagged_rows.any():
         return
-    bad_groups = np.unique(grp_id[flagged_rows])
-    # group row ranges
-    starts = first_idx
     ends = np.append(first_idx[1:], n)
-    contrib_col = acc.columns.get_loc("contrib")
-    nz_col = acc.columns.get_loc("nz")
-    for g in bad_groups:
-        lo, hi = int(starts[g]), int(ends[g])
+    for g in np.unique(grp_id[flagged_rows]):
+        lo, hi = int(first_idx[g]), int(ends[g])
         acc16 = 0
-        nz = 0
+        hit = False
         for i in range(lo, hi):
             for _ in range(int(weight[i])):
                 occ = unit_p[i] if acc16 == 0 else unit[i]
-                if occ % _MOD != 0:
-                    nz = 1
-                acc16 = int((acc16 + occ) % _MOD)
-        # collapse the group's rework into its first row
-        acc.iloc[lo:hi, contrib_col] = 0
-        acc.iloc[lo, contrib_col] = acc16
-        acc.iloc[lo:hi, nz_col] = 0
-        acc.iloc[lo, nz_col] = nz
+                if occ % ACCUM_MOD != 0:
+                    hit = True
+                acc16 = int((acc16 + occ) % ACCUM_MOD)
+        # collapse the doc's rework into its first row
+        contrib[lo:hi] = 0
+        contrib[lo] = acc16
+        nz[lo:hi] = False
+        nz[lo] = hit
+
+
+def _fold_prior(pieces) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One query's occurrences under a prior-carrying LM ranker (lmds,
+    lmp, lmptfidf) → (docid, contrib, nz), sorted by docid.
+
+    ``pieces`` holds one ``(docids, (cf, term), unit, unit_p, weight)``
+    per matched segment: ``unit_p`` is a hit that finds the accumulator
+    at zero and so carries the document prior, ``unit`` any later hit.
+    Terms are processed in the reference's ascending collection
+    frequency order, ties by term (atire_api.c:961-968), so a doc's
+    first row in that order carries the prior once (is_zero_rsv,
+    ranking_function_lmds.c:110-115): its first occurrence adds
+    ``unit_p`` and the other w−1 add ``unit``; a later term adds
+    ``unit·w``. A doc enters the candidates on its first nonzero
+    occurrence (``nz``). :func:`_zero_rsv_rework` replays the docs
+    this fold cannot represent.
+    """
+    tags = {t: i for i, t in enumerate(sorted({p[1] for p in pieces}))}
+    sizes = [p[0].size for p in pieces]
+    docid = np.concatenate([p[0] for p in pieces])
+    tag = np.repeat([tags[p[1]] for p in pieces], sizes)
+    unit = np.concatenate([p[2] for p in pieces])
+    unit_p = np.concatenate([p[3] for p in pieces])
+    weight = np.repeat([p[4] for p in pieces], sizes).astype(np.int64)
+    order = np.lexsort((tag, docid))
+    docid, unit, unit_p, weight = docid[order], unit[order], unit_p[order], weight[order]
+    first = np.ones(docid.size, dtype=bool)
+    first[1:] = docid[1:] != docid[:-1]
+    contrib = np.where(first, unit_p + (weight - 1) * unit, unit * weight)
+    nz = np.where(first, (unit_p != 0) | ((weight > 1) & (unit != 0)), unit != 0)
+    _zero_rsv_rework(contrib, nz, unit, unit_p, weight, first)
+    return docid, contrib, nz
+
+
+def _reduce_topk(
+    docid: np.ndarray,
+    contrib: np.ndarray,
+    nz: np.ndarray,
+    k: int,
+    reduce=np.add,
+    need: int | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """One query's accumulator → its top-k (docids, rsv_fixed) in rank
+    order: rsv_fixed desc, tie larger docid first
+    (search_engine_accumulator.h:36-42).
+
+    ``docid`` is sorted and non-empty; ``contrib`` and ``nz`` are
+    parallel per-occurrence arrays. Each docid's contributions reduce
+    with ``reduce`` (``np.add``; ``np.maximum`` for the docid rankers,
+    whose set_rsv overwrites with the same positional value), then take
+    the signed 16-bit accumulator view (:func:`accum_value`). A doc is a
+    candidate when any of its occurrences was nonzero (add_rsv's 0 →
+    nonzero transition, search_engine_result.h), or, with ``need`` (the
+    conjunctive "allterms" mode), when it was hit by at least ``need``
+    rows (distinct query terms). The top k are the values at or above
+    the k-th largest (``np.partition``), ordered by one lexsort.
+    """
+    first = np.ones(docid.size, dtype=bool)
+    first[1:] = docid[1:] != docid[:-1]
+    starts = np.flatnonzero(first)
+    rsv = accum_value(reduce.reduceat(contrib, starts))
+    if need is None:
+        keep = np.maximum.reduceat(nz, starts)
+    else:
+        keep = np.diff(np.append(starts, docid.size)) >= need
+    docid, rsv = docid[starts][keep], rsv[keep]
+    if 0 < k < rsv.size:
+        top = rsv >= np.partition(rsv, rsv.size - k)[rsv.size - k]
+        docid, rsv = docid[top], rsv[top]
+    order = np.lexsort((-docid, -rsv))[: max(k, 0)]
+    return docid[order], rsv[order]
+
+
+def _topk_frame(per_q: dict[int, tuple]) -> pd.DataFrame:
+    """{query_id: (docids, rsv_fixed)} → one (query_id, docid,
+    rsv_fixed) frame, ordered by (query_id, rank)."""
+    qids = sorted(per_q)
+    none = [np.empty(0, dtype=np.int64)]
+    return pd.DataFrame(
+        {
+            "query_id": np.repeat(
+                np.asarray(qids, dtype=np.int64), [per_q[q][0].size for q in qids]
+            ),
+            "docid": np.concatenate(none + [per_q[q][0] for q in qids]),
+            "rsv_fixed": np.concatenate(none + [per_q[q][1] for q in qids]),
+        }
+    )
 
 
 from dataclasses import dataclass as _dataclass
@@ -954,7 +1062,7 @@ def parse_query(
 
 
 def _grouped_topk(
-    batches: Iterator[pd.DataFrame],
+    batches: Iterator,
     *,
     qmap: dict[str, list[tuple[int, int, float]]],
     nq: dict[int, float],
@@ -970,44 +1078,41 @@ def _grouped_topk(
     quantized: bool,
     codec: str,
 ) -> Iterator[pd.DataFrame]:
-    """The grouped BM25 scorer over matched segment rows → per-query
-    top-k candidates (query_id, docid, rsv_fixed).
+    """The grouped BM25 scorer: matched segment rows → each query's
+    top-k candidates (query_id, docid, rsv_fixed), ordered by
+    (query_id, rank).
+
+    ``batches`` are pandas frames (a mapInPandas task) or Arrow tables
+    (the resident rows); rows are read by column (:func:`_seg_rows`).
+    Each segment decodes once and fans out to every query holding its
+    term, as (docids, contributions) arrays. Per query, the arrays are
+    concatenated, sorted by docid and reduced with numpy
+    (:func:`_reduce_topk`); lmds first folds its document prior into
+    each doc's first term (:func:`_fold_prior`).
 
     Exact for every docid whose matched segments all arrive in
     ``batches``: a task of the distributed placement (rows co-located
     on seg_group) or the driver placement (every matched row). See
     :meth:`SearchEngine._search_grouped`.
     """
-    qids: list[np.ndarray] = []
-    docs: list[np.ndarray] = []
-    contribs: list[np.ndarray] = []
-    hit_flags: list[np.ndarray] = []
-    nzs: list[np.ndarray] = []  # per-occurrence nonzero flags
-    nz_rest: list[np.ndarray] = []  # lmds: flags if NOT first
-    units: list[np.ndarray] = []  # lmds: is_zero_rsv rework
-    unit_ps: list[np.ndarray] = []
-    weights_: list[np.ndarray] = []
     lmds = ranker == "lmds"
-    adjs: list[np.ndarray] = []  # lmds first-hit prior adjustment
-    cfs: list[np.ndarray] = []  # lmds term order: cf asc, term asc
-    terms_: list[np.ndarray] = []
-    for pdf in batches:
-        for row in pdf.itertuples(index=False):
+    docid_ranker = ranker in ("docid_asc", "docid_desc")
+    per_q: dict[int, list[tuple]] = {}
+    for batch in batches:
+        for row in _seg_rows(batch, cum_before=bool(trim_for)):
             # one decode per distinct trim value of this segment
             # (None = full decode); trims are rare
             decs: dict[int | None, object] = {}
             for qid, weight, post in qmap[row.term]:
                 tr = trim_for.get((qid, row.term)) if trim_for else None
                 if tr not in decs:
+                    tk = None
                     if tr is not None:
                         # take to the trim point: cum_before is the
                         # term-global read position at this quantum
-                        # (see SearchEngine._with_trim_cum)
                         cnt = np.asarray(row.doc_counts, dtype=np.int64)
                         before = np.asarray(row.cum_before, dtype=np.int64)
                         tk = np.minimum(cnt, np.maximum(tr - before, 0))
-                    else:
-                        tk = None
                     decs[tr] = _segment_contrib(
                         row, ranker, conjunctive, quantized,
                         n_docs, mean_len, coll_len,
@@ -1020,107 +1125,32 @@ def _grouped_topk(
                 if lmds:
                     _, docids, rsv, prior, cf = dec
                     unit = 1 + ((rsv * post) * 100.0).astype(np.int64)
-                    rsv_p = (rsv + nq[qid] * prior)
-                    unit_p = 1 + ((rsv_p * post) * 100.0).astype(np.int64)
-                    # weight-fold: the first OCCURRENCE carries the
-                    # prior, the remaining w-1 add plain rsv; contrib
-                    # assumes this row is the doc's first term, adj
-                    # undoes that if it isn't
-                    contribs.append(unit_p + (weight - 1) * unit)
-                    adjs.append(unit - unit_p)
-                    cfs.append(np.full(docids.size, cf, np.int64))
-                    terms_.append(np.full(docids.size, row.term, dtype=object))
-                    # candidate-entry rule per OCCURRENCE, resolved
-                    # after the first-term sort: the FIRST term's
-                    # occurrences are (unit_p, unit×(w−1)), later
-                    # terms' are (unit×w)
-                    nzs.append(
-                        ((unit_p != 0) | ((weight > 1) & (unit != 0))).astype(
-                            np.int64
-                        )
-                    )
-                    nz_rest.append((unit != 0).astype(np.int64))
-                    units.append(unit)
-                    unit_ps.append(unit_p)
-                    weights_.append(np.full(docids.size, weight, np.int64))
+                    unit_p = 1 + (((rsv + nq[qid] * prior) * post) * 100.0).astype(np.int64)
+                    piece = (docids, (cf, row.term), unit, unit_p, weight)
                 else:
                     docids, contrib = _per_query_contrib(dec, nq[qid], post)
                     # add_rsv transitions a doc into the candidate list
                     # only when the contribution is nonzero
-                    # (search_engine_result.h) — per-occurrence, so
-                    # test before the fold
-                    nzs.append((contrib != 0).astype(np.int64))
-                    if ranker in ("docid_asc", "docid_desc"):
-                        # set_rsv semantics: positional value, no
-                        # query-weight multiplication
-                        contribs.append(contrib)
-                    else:
-                        contribs.append(contrib * weight)
-                qids.append(np.full(docids.size, qid, dtype=np.int64))
-                docs.append(docids)
-                hit_flags.append(np.ones(docids.size, dtype=np.int64))
-    if not qids:
-        return
-    acc = pd.DataFrame(
-        {
-            "query_id": np.concatenate(qids),
-            "docid": np.concatenate(docs),
-            "contrib": np.concatenate(contribs),
-            "hit": np.concatenate(hit_flags),
-            "nz": np.concatenate(nzs),
-        }
-    )
-    if lmds:
-        # every row's contrib includes the doc prior; all but the first
-        # term (cf asc, term asc — the reference's ascending-cf
-        # processing order, atire_api.c:961-968) must take it back out
-        # via adj
-        acc["adj"] = np.concatenate(adjs)
-        acc["cf"] = np.concatenate(cfs)
-        acc["term"] = np.concatenate(terms_)
-        acc["nz_rest"] = np.concatenate(nz_rest)
-        acc["unit"] = np.concatenate(units)
-        acc["unit_p"] = np.concatenate(unit_ps)
-        acc["weight"] = np.concatenate(weights_)
-        acc = acc.sort_values(
-            ["query_id", "docid", "cf", "term"], kind="stable"
-        ).reset_index(drop=True)
-        first = acc.groupby(["query_id", "docid"], sort=False).cumcount().eq(0)
-        acc.loc[first, "adj"] = 0
-        acc["contrib"] = acc["contrib"] + acc["adj"]
-        # only the first term's occurrences include the prior
-        acc.loc[~first, "nz"] = acc.loc[~first, "nz_rest"]
-        # exact is_zero_rsv replay for groups the fold cannot represent
-        # (zero contributions / zero-wrapped prefixes)
-        _zero_rsv_rework(acc, first.to_numpy())
-    # docid rankers use the reference's set_rsv (overwrite) semantics:
-    # identical per-term values, MAX == the value
-    contrib_agg = "max" if ranker in ("docid_asc", "docid_desc") else "sum"
-    agg = (
-        acc.groupby(["query_id", "docid"], sort=False)
-        .agg(
-            rsv_fixed=("contrib", contrib_agg),
-            th=("hit", "sum"),
-            nz=("nz", "max"),
-        )
-        .reset_index()
-    )
-    agg["rsv_fixed"] = accum_value(agg["rsv_fixed"])
-    if conjunctive:
-        need = agg["query_id"].map(n_terms_per_q)
-        agg = agg[agg["th"] >= need]
-    else:
-        # a doc whose every contribution truncated to zero never
-        # transitioned 0→nonzero: not a candidate
-        agg = agg[agg["nz"] > 0]
-    outs = []
-    for _, g in agg.groupby("query_id", sort=False):
-        if len(g) > k:
-            order = np.lexsort((-g["docid"].to_numpy(), -g["rsv_fixed"].to_numpy()))
-            g = g.iloc[order[:k]]
-        outs.append(g[["query_id", "docid", "rsv_fixed"]])
-    if outs:
-        yield pd.concat(outs)
+                    # (search_engine_result.h) — per occurrence, so
+                    # test before the weight multiplies it; the docid
+                    # rankers' set_rsv value is positional, unweighted
+                    piece = (docids, contrib if docid_ranker else contrib * weight, contrib != 0)
+                per_q.setdefault(qid, []).append(piece)
+    top: dict[int, tuple] = {}
+    for qid, pieces in per_q.items():
+        if lmds:
+            docid, contrib, nz = _fold_prior(pieces)
+        else:
+            docid, contrib, nz = (np.concatenate(a) for a in zip(*pieces))
+            order = np.argsort(docid)
+            docid, contrib, nz = docid[order], contrib[order], nz[order]
+        if docid.size:
+            top[qid] = _reduce_topk(
+                docid, contrib, nz, k,
+                reduce=np.maximum if docid_ranker else np.add,
+                need=n_terms_per_q[qid] if conjunctive else None,
+            )
+    yield _topk_frame(top)
 
 
 class SearchEngine:
@@ -1325,7 +1355,10 @@ class SearchEngine:
         and comes back as a driver-local frame, with no Spark job once
         the index is loaded; any other batch returns a lazy
         distributed plan — see :meth:`_search_grouped`. A batch with
-        no terms costs no job.
+        no terms costs no job. A driver-local frame costs no job when
+        read with ``collect()`` but one with ``toPandas()``, which
+        goes through Spark's Arrow collect path: a caller that wants
+        pandas rows should call :meth:`search_ranked`.
         """
         res = self._search(
             queries, k, ranker, conjunctive, parsed_terms,
@@ -1410,10 +1443,9 @@ class SearchEngine:
             # the reference likewise exits on unsupported lmp
             # combinations (e.g. quantum processing, puurula.c:62)
             raise ValueError("lmp/lmptfidf support only plain ranked search")
-        # query plan: the term set is a pushed-down isin filter on the
-        # postings scan — no per-query DataFrame, no broadcast
-        # exchange; each matched segment is decoded once and fans out
-        # to every query that contains its term via a closure map
+        # term → the (query, weight, postscalar) entries that hold it:
+        # each matched segment is decoded once and fans out to every
+        # query that contains its term via this closure map
         qmap: dict[str, list[tuple[int, int, float]]] = {}
         n_terms_per_q: dict[int, int] = {}
         nq: dict[int, float] = {}  # LM term count per query (chain length)
@@ -1431,9 +1463,7 @@ class SearchEngine:
             for term, weight, post in parsed:
                 qmap.setdefault(term, []).append((qid, weight, post))
         if not qmap:
-            return _rank_local(None, k)
-
-        hits = self.postings.filter(F.col("term").isin(list(qmap)))
+            return _rank_local(_topk_frame({}), k)
 
         # read-side trim points (search_engine.c:938-963): the global
         # -K read trim (``trim_postings_k``) plus the single-term
@@ -1451,20 +1481,21 @@ class SearchEngine:
             if eff is not None:
                 for term, _w, _p in plist:
                     trim_for[(qid, term)] = eff
-        if trim_for:
-            hits = self._with_trim_cum(hits)
 
+        # the postings scan is planned only on a path that reads it
+        if ranker in ("lmp", "lmptfidf"):
+            return self._search_puurula(self._hits(qmap), qmap, nq, k, ranker)
         term_aux: dict | None = None
         if ranker in ("bm25t", "bm25adpt"):
-            term_aux = self._adaptive_k1_map(hits, ranker)
-
-        if ranker in ("lmp", "lmptfidf"):
-            return self._search_puurula(hits, qmap, nq, k, ranker)
-
+            term_aux = self._adaptive_k1_map(self._hits(qmap), ranker)
         return self._search_grouped(
-            hits, qmap, nq, n_terms_per_q, k, ranker, conjunctive,
-            trim_for, term_aux,
+            qmap, nq, n_terms_per_q, k, ranker, conjunctive, trim_for, term_aux
         )
+
+    def _hits(self, terms) -> DataFrame:
+        """The postings rows of ``terms``: a pushed-down ``isin``
+        filter on the postings scan."""
+        return self.postings.filter(F.col("term").isin(list(terms)))
 
     def _collected(self, results: DataFrame) -> DataFrame:
         """Materialize a result frame on the driver, so the cached
@@ -1747,15 +1778,8 @@ class SearchEngine:
                     qlen[qid] += weight * v
 
         def co_fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {
-                    "query_id": pd.Series(dtype=np.int64),
-                    "docid": pd.Series(dtype=np.int64),
-                    "rsv_fixed": pd.Series(dtype=np.int64),
-                }
-            )
             if not len(left) or not len(right):
-                return empty
+                return _topk_frame({})
             order = np.argsort(right["docid"].to_numpy(np.int64))
             a_doc = right["docid"].to_numpy(np.int64)[order]
             if is_idf:
@@ -1766,10 +1790,8 @@ class SearchEngine:
                 ]
             else:
                 a_ddl = np.stack(right["ddl"].to_numpy())[order][:, g_idx]
-            qids, docs, contribs, adjs, cfs, terms_ = [], [], [], [], [], []
-            nzs, nz_rest = [], []
-            units, unit_ps, weights_ = [], [], []
-            for row in left.itertuples(index=False):
+            per_q: dict[int, list[tuple]] = {}
+            for row in _seg_rows(left):
                 docids, impacts, lens = decode_segment(
                     np.asarray(row.impacts),
                     np.asarray(row.doc_counts),
@@ -1841,65 +1863,12 @@ class SearchEngine:
                     fin = np.isfinite(rp)
                     tr[fin] = rp[fin].astype(np.int64)
                     unit_p = 1 + tr
-                    contribs.append(unit_p + (weight - 1) * unit)
-                    adjs.append(unit - unit_p)
-                    # candidate-entry rule, resolved post-sort like adj
-                    nzs.append(
-                        (
-                            (unit_p != 0) | ((weight > 1) & (unit != 0))
-                        ).astype(np.int64)
+                    per_q.setdefault(qid, []).append(
+                        (d_k, (int(row.cf), row.term), unit, unit_p, weight)
                     )
-                    nz_rest.append((unit != 0).astype(np.int64))
-                    units.append(unit)
-                    unit_ps.append(unit_p)
-                    weights_.append(np.full(d_k.size, weight, np.int64))
-                    qids.append(np.full(d_k.size, qid, dtype=np.int64))
-                    docs.append(d_k)
-                    cfs.append(
-                        np.full(d_k.size, int(row.cf), dtype=np.int64)
-                    )
-                    terms_.append(np.full(d_k.size, row.term, dtype=object))
-            if not qids:
-                return empty
-            acc = pd.DataFrame(
-                {
-                    "query_id": np.concatenate(qids),
-                    "docid": np.concatenate(docs),
-                    "contrib": np.concatenate(contribs),
-                    "adj": np.concatenate(adjs),
-                    "cf": np.concatenate(cfs),
-                    "term": np.concatenate(terms_),
-                    "nz": np.concatenate(nzs),
-                    "nz_rest": np.concatenate(nz_rest),
-                    "unit": np.concatenate(units),
-                    "unit_p": np.concatenate(unit_ps),
-                    "weight": np.concatenate(weights_),
-                }
+            return _topk_frame(
+                {qid: _reduce_topk(*_fold_prior(p), k) for qid, p in per_q.items()}
             )
-            acc = acc.sort_values(
-                ["query_id", "docid", "cf", "term"], kind="stable"
-            ).reset_index(drop=True)
-            first = acc.groupby(["query_id", "docid"], sort=False).cumcount().eq(0)
-            acc.loc[first, "adj"] = 0
-            acc["contrib"] = acc["contrib"] + acc["adj"]
-            acc.loc[~first, "nz"] = acc.loc[~first, "nz_rest"]
-            _zero_rsv_rework(acc, first.to_numpy())
-            agg = (
-                acc.groupby(["query_id", "docid"], sort=False)
-                .agg(rsv_fixed=("contrib", "sum"), nz=("nz", "max"))
-                .reset_index()
-            )
-            agg["rsv_fixed"] = accum_value(agg["rsv_fixed"])
-            agg = agg[agg["nz"] > 0]
-            outs = []
-            for _, g_ in agg.groupby("query_id", sort=False):
-                if len(g_) > k:
-                    sel = np.lexsort(
-                        (-g_["docid"].to_numpy(), -g_["rsv_fixed"].to_numpy())
-                    )[:k]
-                    g_ = g_.iloc[sel]
-                outs.append(g_[["query_id", "docid", "rsv_fixed"]])
-            return pd.concat(outs)
 
         cand = (
             hits.groupBy("seg_group")
@@ -2019,7 +1988,6 @@ class SearchEngine:
     # ------------------------------------------------------------------
     def _search_grouped(
         self,
-        hits: DataFrame,
         qmap: dict[str, list[tuple[int, int, float]]],
         nq: dict[int, float],
         n_terms_per_q: dict[int, int],
@@ -2030,29 +1998,31 @@ class SearchEngine:
         term_aux: dict | None = None,
     ) -> pd.DataFrame | DataFrame:
         """The grouped scorer (:func:`_grouped_topk`) in one of two
-        placements, chosen from the index, not the batch:
+        placements, chosen from the index, not the batch, before any
+        Spark object is built:
 
         - **Driver** — the index is resident (:meth:`_resident`) and
-          the batch has no read-side trims. The matched rows come from
-          the resident table and are scored in the driver process,
-          where the scorer sees every one and so emits the exact
-          top-k, returned as a ranked pandas frame. This is the
-          reference's in-RAM term-at-a-time search, and once the table
-          is loaded it costs no Spark job.
+          the batch has no read-side trims. The matched rows are
+          Arrow slices of the resident table, scored in the driver
+          process, where the scorer sees every one and so emits the
+          exact top-k; :func:`_rank_local` numbers the ranks and
+          returns the ≤ k rows per query as a pandas frame. This is
+          the reference's in-RAM term-at-a-time search: no Spark job
+          and no py4j call once the table is loaded.
         - **Distributed** — every other batch (an index above the
           resident cap, or read-side trims, whose per-term prefix sums
-          run distributed, see :meth:`_with_trim_cum`): partition by
+          run distributed, see :meth:`_with_trim_cum`): the postings
+          scan with a pushed-down term filter, partitioned by
           seg_group so every docid's full accumulation completes
-          inside one task, emit only the per-partition top-k
-          candidates per query, then rank them with
-          :meth:`_rank_topk`. Segments of *all* terms for a given
-          docid share its seg_group (the group is a pure function of
-          the docid block), so a hash repartition on seg_group
-          co-locates everything a docid needs — the reference's
-          accumulator array sliced into disjoint docid ranges, one per
-          task. Shuffle volume is the handful of matching compressed
-          segments + k·queries candidate rows per partition, never one
-          row per posting.
+          inside one task; each task emits only its top-k candidates
+          per query, and :meth:`_rank_topk` ranks them. Segments of
+          *all* terms for a given docid share its seg_group (the group
+          is a pure function of the docid block), so a hash
+          repartition on seg_group co-locates everything a docid needs
+          — the reference's accumulator array sliced into disjoint
+          docid ranges, one per task. Shuffle volume is the handful of
+          matching compressed segments + k·queries candidate rows per
+          partition, never one row per posting.
         """
         score = functools.partial(
             _grouped_topk,
@@ -2064,7 +2034,10 @@ class SearchEngine:
         )
         res = None if trim_for else self._resident()
         if res is not None:
-            return _rank_local(next(score([res.rows(list(qmap))]), None), k)
+            return _rank_local(next(score([res.rows(list(qmap))])), k)
+        hits = self._hits(qmap)
+        if trim_for:
+            hits = self._with_trim_cum(hits)
         # the seg_group repartition co-locates every segment a docid's
         # accumulation needs — but a docid only spans MULTIPLE matched
         # rows when its query has ≥2 distinct terms (the build merges a
@@ -2073,10 +2046,9 @@ class SearchEngine:
         # single-term batch therefore skips the shuffle entirely: the
         # per-partition bounded top-k stays exact, one whole exchange
         # cheaper per query.
-        src = hits
         if any(n > 1 for n in n_terms_per_q.values()):
-            src = hits.repartition("seg_group")
-        cand = src.mapInPandas(
+            hits = hits.repartition("seg_group")
+        cand = hits.mapInPandas(
             score, schema="query_id long, docid long, rsv_fixed long"
         )
         return self._rank_topk(cand, k)

@@ -49,6 +49,32 @@ def placement(request, monkeypatch):
     return request.param
 
 
+# the rankers scored by query._grouped_topk (lmp and lmptfidf cogroup
+# with the Puurula length vectors instead)
+_GROUPED_RANKERS = query_mod.KNOWN_RANKERS - {"lmp", "lmptfidf"}
+
+# queries that share terms, one repeating a term
+_SHARED_TERMS_BATCH = [(1, "alpha alpha bravo"), (2, "alpha 00001"), (3, "bravo alpha")]
+
+
+@pytest.fixture(scope="module")
+def grouped_reference(small_engine):
+    """(ranker, conjunctive) → the resident placement's rows for
+    _SHARED_TERMS_BATCH at k=12, for every grouped ranker plus
+    conjunctive bm25."""
+    keys = [(r, False) for r in sorted(_GROUPED_RANKERS)] + [("bm25", True)]
+    ref = {}
+    for ranker, conjunctive in keys:
+        df = small_engine.search_batch(
+            _SHARED_TERMS_BATCH, k=12, ranker=ranker, conjunctive=conjunctive
+        )
+        assert _placement_of(df) == "resident"
+        ref[(ranker, conjunctive)] = pd.DataFrame.from_records(
+            df.collect(), columns=df.columns
+        )
+    return ref
+
+
 def _placement_of(df) -> str:
     plan = df._jdf.queryExecution().executedPlan().toString()
     if "MapInPandas" in plan:
@@ -296,6 +322,64 @@ class TestRankIdentity:
         got = small_engine.search_batch(dd, k=k, ranker="docid_desc").toPandas()
         for qid, qtext in dd:
             _assert_ranked(got, qid, _docid_desc(small_oracle, qtext, k), qtext)
+
+    def test_grouped_rankers_rank_identically_in_both_placements(
+        self, small_engine, small_oracle, placement, grouped_reference
+    ):
+        """Every ranker of the grouped scorer, conjunctive included,
+        gives the same rows in both placements on a batch whose queries
+        share terms and repeat one, so the per-query accumulation is
+        keyed by (query_id, docid); bm25, lmds, docid_desc and
+        conjunctive also match the oracle."""
+        batch, k = _SHARED_TERMS_BATCH, 12
+        for (ranker, conjunctive), want in grouped_reference.items():
+            df = small_engine.search_batch(
+                batch, k=k, ranker=ranker, conjunctive=conjunctive
+            )
+            assert _placement_of(df) == placement
+            got = pd.DataFrame.from_records(df.collect(), columns=df.columns)
+            pd.testing.assert_frame_equal(got, want, obj=f"{ranker} {conjunctive}")
+        oracle = {
+            ("bm25", False): lambda q: small_oracle.search(q, k=k),
+            ("lmds", False): lambda q: _lmds(small_oracle, q, k),
+            ("docid_desc", False): lambda q: _docid_desc(small_oracle, q, k),
+            ("bm25", True): lambda q: _conjunctive(small_oracle, q, k),
+        }
+        for key, expect in oracle.items():
+            for qid, qtext in batch:
+                _assert_ranked(grouped_reference[key], qid, expect(qtext), qtext)
+
+    def test_warm_resident_search_plans_no_postings_scan(
+        self, small_engine, small_oracle, monkeypatch
+    ):
+        """A warm resident engine scores an untrimmed batch without
+        building the postings scan: with a postings DataFrame whose
+        ``filter`` raises, every grouped ranker that needs no
+        per-term pre-pass (bm25t and bm25adpt solve k1 from a Spark
+        job) still answers, and the rankers with an oracle expectation
+        match it."""
+        batch, k = _SHARED_TERMS_BATCH, 12
+        small_engine.search_ranked(batch, k=k)  # warm: loads a resident table
+
+        class NoScan:
+            def filter(self, *args, **kwargs):
+                raise AssertionError("planned a postings scan")
+
+        monkeypatch.setattr(small_engine, "postings", NoScan())
+        for ranker in sorted(_GROUPED_RANKERS - {"bm25t", "bm25adpt"}):
+            small_engine.search_ranked(batch, k=k, ranker=ranker)
+        for ranker, expect in [
+            ("bm25", lambda q: small_oracle.search(q, k=k)),
+            ("lmds", lambda q: _lmds(small_oracle, q, k)),
+            ("docid_desc", lambda q: _docid_desc(small_oracle, q, k)),
+        ]:
+            got = small_engine.search_ranked(batch, k=k, ranker=ranker)
+            for qid, qtext in batch:
+                _assert_ranked(got, qid, expect(qtext), qtext)
+        df = small_engine.search_batch(batch, k=k, conjunctive=True)
+        got = pd.DataFrame.from_records(df.collect(), columns=df.columns)
+        for qid, qtext in batch:
+            _assert_ranked(got, qid, _conjunctive(small_oracle, qtext, k), qtext)
 
     def test_resident_index_scores_any_batch_on_the_driver(
         self, small_engine, small_oracle, jobs_of

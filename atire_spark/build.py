@@ -7,13 +7,14 @@ reference                                   → this engine
 ------------------------------------------- ----------------------------
 8 indexing threads parse docs in parallel    input partitions; tokenize
 (directory_iterator_preindex.c:56-80)        in mapInPandas (Arrow)
-per-doc 256-bucket hash of term→tf           vectorized pandas groupby
-(memory_index_one.c)                         per batch
+per-doc 256-bucket hash of term→tf           one np.unique over (row,
+(memory_index_one.c)                         term) codes per batch
 serial docno assignment in doclist order     range-partition by
 (atire/index.c:507-525)                      (conv_id, turn_idx) + per-
                                              partition offsets (two-pass)
-global hash-of-trees posting accumulation    groupBy(term, docid-block)
-(memory_index.c:126-308)                     collect_list (JVM-side)
+global hash-of-trees posting accumulation    per-(term, docid-block)
+(memory_index.c:126-308)                     arrays, one Arrow pass per
+                                             batch (_stage1)
 atire_merge per-term concat with docid       second groupBy(term,
 offsets (atire_merge.c:563-930)              seg_group) merge in Arrow
 impact ordering + vbyte serialisation        impact_order kernel per
@@ -46,7 +47,7 @@ TF_CAP = 255  # memory_index_hash_node.h:140-143
 
 TOKENIZED_SCHEMA = (
     "conv_id string, turn_idx int, doc_len long, terms array<string>, "
-    "tfs array<int>, occs array<int>"
+    "occs array<int>"
 )
 DOCMAP_SCHEMA = "docid long, conv_id string, turn_idx int, doc_len long"
 POSTINGS_SCHEMA = (
@@ -97,9 +98,11 @@ def tokenize_stage(
     runs — :func:`atire_spark.kernels.tokenizer.dict_segmenter` builds
     the dictionary-driven one).
 
-    Output: one row per turn with (terms[], tfs[]) already aggregated
+    Output: one row per turn with (terms[], occs[]) already aggregated
     per document (the reference's memory_index_one per-doc hash) and
-    doc_len = surviving WORD+NUMBER token count.
+    doc_len = surviving WORD+NUMBER token count. ``occs`` are the
+    uncapped occurrence counts; stage 1 (:func:`_stage1`) derives the
+    stored, saturated tf from them.
 
     ``stemmer`` (any kernels.stem.STEMMERS name | None) applies index-side stemming
     (index_document.c:103-111: words > 3 chars only, numbers raw) to
@@ -135,50 +138,23 @@ def tokenize_stage(
                 keep = ~pd.Series(flat).isin(stops).to_numpy()
                 row_idx, flat = row_idx[keep], flat[keep]
             terms: list = [[] for _ in range(n)]
-            tfs: list = [[] for _ in range(n)]
             occs: list = [[] for _ in range(n)]
             if flat.size:
-                # vectorized per-doc (term, tf) counting: factorize the
-                # token stream, count (row, term_code) pairs with one
-                # np.unique, split on row boundaries. The reference's
-                # per-doc hash (memory_index_one.c) without the hash.
-                codes, uniq = pd.factorize(flat)
-                if stemmer is not None:
-                    from atire_spark.kernels.stem import stem_unique
-
-                    stemmed = stem_unique(
-                        np.asarray(uniq, dtype=object), stemmer
-                    )
-                    codes2, uniq = pd.factorize(stemmed)
-                    codes = codes2[codes]
-                uniq = np.asarray(uniq, dtype=object)
-                nu = len(uniq)
-                key = row_idx * nu + codes
-                uk, occ = np.unique(key, return_counts=True)
-                rows = uk // nu
-                terms_flat = uniq[uk % nu]
-                # stored tf saturates (memory_index_hash_node.h:140-143);
-                # collection frequency keeps counting every occurrence
-                # (memory_index_hash_node.h:64-65)
-                tf_flat = np.minimum(occ, TF_CAP).astype(np.int32)
+                rows, terms_flat, occ = _doc_term_counts(row_idx, flat, stemmer)
                 bounds = np.flatnonzero(np.diff(rows)) + 1
                 present = rows[np.concatenate(([0], bounds))]
-                for i, (t, f, o) in enumerate(
-                    zip(
-                        np.split(terms_flat, bounds),
-                        np.split(tf_flat, bounds),
-                        np.split(occ.astype(np.int32), bounds),
-                    )
+                for r, t, o in zip(
+                    present,
+                    np.split(terms_flat, bounds),
+                    np.split(occ.astype(np.int32), bounds),
                 ):
-                    r = int(present[i])
-                    terms[r], tfs[r], occs[r] = t, f, o
+                    terms[r], occs[r] = t, o
             yield pd.DataFrame(
                 {
                     "conv_id": pdf["conv_id"],
                     "turn_idx": pdf["turn_idx"],
                     "doc_len": lens,
                     "terms": terms,
-                    "tfs": tfs,
                     "occs": occs,
                 }
             )
@@ -194,10 +170,6 @@ def tokenize_stage(
 
 
 # ------------------------------------------ single-tokenize build (fast path)
-SIDE_TOKENS_SCHEMA = (
-    "conv_id string, turn_idx int, doc_len long, terms array<string>, "
-    "occs array<int>"
-)
 KEYS_SCHEMA = "conv_id string, turn_idx int, doc_len long"
 # docmaps up to this many rows MAY broadcast in the docid join
 # (pass 3); larger corpora fall back to a shuffle join — the same
@@ -433,6 +405,11 @@ def _key_bounds(
         .sample(fraction=frac, seed=13)
         .collect()
     )
+    if any(r["conv_id"] is None or r["turn_idx"] is None for r in rows):
+        raise ValueError(
+            "transcripts key columns (conv_id, turn_idx) contain NULLs; "
+            "every turn needs a non-null key for stable docid assignment"
+        )
     skeys = sorted((r["conv_id"], int(r["turn_idx"])) for r in rows)
     if not skeys:
         return []
@@ -572,144 +549,6 @@ def _docids_from_keys(
     return parts, docmap, acc, coll_len
 
 
-def _stage1_arrow_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            ("term", pa.string()),
-            ("block", pa.int64()),
-            ("docids", pa.list_(pa.int64())),
-            ("tfs", pa.list_(pa.int32())),
-            ("lens", pa.list_(pa.int64())),
-            ("df_b", pa.int64()),
-            ("cf_b", pa.int64()),
-        ]
-    )
-
-
-def _stage1_from_tokens(
-    tokens: DataFrame, block_bits: int, docid_pdf: pd.DataFrame | None = None
-) -> DataFrame:
-    """Pass 3 map side: docid-joined token rows → per-(term, block)
-    posting-array rows, entirely in Arrow (``mapInArrow``): the token
-    list columns are consumed through their offset buffers and the
-    term vocabulary is factorized by Arrow's C++ dictionary encode —
-    no per-row pandas lists or Python string churn on either side.
-
-    ``docid_pdf`` (a pandas (conv_id, turn_idx, docid) frame) routes
-    the docid join through the TASK CLOSURE instead of a JVM broadcast
-    join: under the broadcast threshold the docmap is driver-resident
-    either way, and an indexed pandas lookup per batch replaces the
-    BroadcastExchange + hash-join stage (measured ~0.3 s per 140k-turn
-    build). When ``None`` the input rows must already carry ``docid``
-    (the at-scale shuffle-join path).
-
-    Batches arrive in arbitrary docid order (the side-written files
-    are input-partition-local, not globally sorted); postings are
-    docid-sorted within each (term, block) here and the segment merge
-    (:func:`kernels.segment.build_segments_flat`) restores the global
-    order per quantum, so no cross-batch contiguity is required."""
-    lookup = None
-    if docid_pdf is not None:
-        lookup = docid_pdf.set_index(["conv_id", "turn_idx"])["docid"]
-
-    def fn(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        schema = _stage1_arrow_schema()
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            if lookup is not None:
-                conv = batch.column("conv_id").to_pylist()
-                turn = batch.column("turn_idx").to_numpy(
-                    zero_copy_only=False
-                )
-                # rows whose key misses (doc_len==0 rows are never in
-                # the docmap and never side-written, so misses cannot
-                # happen for well-formed input; reindex keeps this
-                # total either way)
-                docid = (
-                    lookup.reindex(
-                        pd.MultiIndex.from_arrays([conv, turn])
-                    )
-                    .to_numpy(np.float64)
-                )
-                ok = ~np.isnan(docid)
-                if not ok.all():
-                    raise ValueError(
-                        "side-written token rows contain keys absent "
-                        "from the docmap — staging is inconsistent"
-                    )
-                docid = docid.astype(np.int64)
-            else:
-                docid = batch.column("docid").to_numpy(zero_copy_only=False)
-            dlen = batch.column("doc_len").to_numpy(zero_copy_only=False)
-            terms_la = batch.column("terms")
-            counts = pc.list_value_length(terms_la).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            flat_terms = terms_la.flatten()
-            if len(flat_terms) == 0:
-                continue
-            occ = (
-                batch.column("occs")
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            de = flat_terms.dictionary_encode()
-            codes = de.indices.to_numpy(zero_copy_only=False).astype(
-                np.int64
-            )
-            vocab = de.dictionary
-            docids_flat = np.repeat(docid.astype(np.int64), counts)
-            lens_flat = np.repeat(dlen.astype(np.int64), counts)
-            block = docids_flat >> block_bits
-            nb = int(block.max()) + 1
-            key = codes * nb + block
-            order = np.lexsort((docids_flat, key))
-            k_s = key[order]
-            bounds = np.flatnonzero(np.diff(k_s)) + 1
-            starts = np.concatenate(([0], bounds))
-            offs = np.concatenate((starts, [k_s.size]))
-            d_s = docids_flat[order]
-            o_s = occ[order]
-            l_s = lens_flat[order]
-            # stored tf saturates (memory_index_hash_node.h:140-143);
-            # collection frequency keeps counting every occurrence
-            tf_s = np.minimum(o_s, TF_CAP).astype(np.int32)
-            off32 = pa.array(offs, type=pa.int32())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    vocab.take(
-                        pa.array(k_s[starts] // nb, type=pa.int64())
-                    ),
-                    pa.array(k_s[starts] % nb, type=pa.int64()),
-                    pa.ListArray.from_arrays(off32, pa.array(d_s)),
-                    pa.ListArray.from_arrays(off32, pa.array(tf_s)),
-                    pa.ListArray.from_arrays(off32, pa.array(l_s)),
-                    pa.array(
-                        np.diff(offs).astype(np.int64), type=pa.int64()
-                    ),
-                    pa.array(
-                        np.add.reduceat(o_s, starts).astype(np.int64),
-                        type=pa.int64(),
-                    ),
-                ],
-                schema=schema,
-            )
-
-    cols = (
-        ["conv_id", "turn_idx", "doc_len", "terms", "occs"]
-        if lookup is not None
-        else ["docid", "doc_len", "terms", "occs"]
-    )
-    return tokens.select(*cols).mapInArrow(fn, schema=STAGE1_SCHEMA)
-
-
 # ---------------------------------------------------------- docid assignment
 def _sorted_partitions(
     tokenized: DataFrame, num_ranges: int | None = None
@@ -762,35 +601,15 @@ def _sorted_partitions(
 
 def _range_bounds(
     transcripts: DataFrame, n_buckets: int
-) -> list[tuple[str, int]]:
-    """Range-bucket bounds over (conv_id, turn_idx), sampled from the
-    RAW transcripts. repartitionByRange on the tokenized frame would
-    run its sampling pass over the token arrays (an extra
-    materialization of the expensive columns); sampling the two key
-    columns of the raw input costs one cheap column-pruned scan."""
+) -> tuple[list[tuple[str, int]], int]:
+    """(range-bucket bounds, row count) over (conv_id, turn_idx),
+    sampled from the RAW transcripts. repartitionByRange on the
+    tokenized frame would run its sampling pass over the token arrays
+    (an extra materialization of the expensive columns); sampling the
+    two key columns of the raw input costs one cheap column-pruned
+    scan."""
     n = transcripts.count()
-    if n == 0:
-        return []
-    frac = min(1.0, (n_buckets * 128.0) / n)
-    rows = (
-        transcripts.select("conv_id", "turn_idx")
-        .sample(fraction=frac, seed=13)
-        .collect()
-    )
-    if any(r["conv_id"] is None or r["turn_idx"] is None for r in rows):
-        raise ValueError(
-            "transcripts key columns (conv_id, turn_idx) contain NULLs; "
-            "every turn needs a non-null key for stable docid assignment"
-        )
-    keys = sorted((r["conv_id"], int(r["turn_idx"])) for r in rows)
-    if not keys:
-        return []
-    bounds: list[tuple[str, int]] = []
-    for i in range(1, n_buckets):
-        b = keys[min(int(len(keys) * i / n_buckets), len(keys) - 1)]
-        if not bounds or b != bounds[-1]:
-            bounds.append(b)
-    return bounds
+    return _key_bounds(transcripts, n_buckets, n), n
 
 
 def _stage_sorted(
@@ -960,42 +779,6 @@ def assign_docids(tokenized: DataFrame, num_ranges: int | None = None) -> DataFr
     return parts.mapInPandas(fn, schema="docid long, " + TOKENIZED_SCHEMA)
 
 
-def _stage1_from_staged(
-    staged: DataFrame, offsets: dict[int, int], block_bits: int
-) -> DataFrame:
-    """Partition-local posting construction over the staged parquet:
-    docid = offsets[pid] + local_idx computed in numpy, one columnar
-    read of the token arrays.
-
-    Batches are processed PER BUCKET (pid), docid-sorted: each emitted
-    stage1 row must cover a contiguous docid range disjoint from every
-    other row of the same (term, block) — the merge concatenates rows
-    in first-docid order and delta-encodes, so interleaved ranges
-    would produce negative deltas. A bucket is a contiguous docid
-    range by construction; a hash partition (and hence an Arrow batch)
-    may hold several non-adjacent buckets, so the batch splits."""
-    off = dict(offsets)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf.reset_index(drop=True)
-            base = pdf["pid"].map(off).to_numpy(dtype=np.int64)
-            pdf.insert(0, "docid", base + pdf["local_idx"].to_numpy(np.int64))
-            for _pid, sub in pdf.groupby("pid", sort=True):
-                sub = sub.sort_values("docid", kind="stable").reset_index(
-                    drop=True
-                )
-                out = _group_posting_batch(sub, block_bits)
-                if out is not None:
-                    yield out
-
-    return staged.select(
-        "pid", "local_idx", "doc_len", "terms", "tfs", "occs"
-    ).mapInPandas(fn, schema=STAGE1_SCHEMA)
-
-
 # ---------------------------------------------------------- postings build
 STAGE1_SCHEMA = (
     "term string, block long, docids array<long>, tfs array<int>, "
@@ -1003,105 +786,89 @@ STAGE1_SCHEMA = (
 )
 
 
-def _stage1(docs: DataFrame, block_bits: int, term_filter=None) -> DataFrame:
-    """(docid, terms[], tfs[], occs[], doc_len) rows → per-(term,
-    docid-block) posting arrays: **partition-local posting-list
-    construction** (the north_star's map side; reference analogue is
-    one `memory_index` per indexing part, README.md:78-86).
+def _stage1(docs: DataFrame, block_bits: int) -> DataFrame:
+    """(docid, doc_len, terms[], occs[]) rows → per-(term, docid-block)
+    posting-array rows: **partition-local posting-list construction**
+    (the reference analogue is one ``memory_index`` per indexing part,
+    README.md:78-86). The one stage-1 kernel: the batch build, the
+    stream append and the checkpointed build all feed it.
 
-    Each input partition is a contiguous docid range (assign_docids
-    range-partitions by the docid order), so one vectorized numpy pass
-    per Arrow batch groups its postings by (term, block) locally and
-    emits *compact array rows* — the term-partitioned shuffle then
-    moves thousands of array rows, not one row per posting. A
-    stop-term's data arrives as many bounded rows (≤ block size each),
-    which is exactly the salt that keeps reducers balanced.
+    One ``mapInArrow`` pass per batch: the token list columns are read
+    through their offset buffers and the vocabulary is factorized by
+    Arrow's dictionary encode, so neither side builds per-row Python
+    lists. The term-partitioned encode shuffle then moves compact array
+    rows, not one row per posting; a stop-term arrives as many bounded
+    rows (≤ one block each), the salt that keeps reducers balanced.
 
-    A (term, block) pair may span several batches/partitions; rows
-    carry their first docid so the merge re-orders deterministically.
-    """
+    Docids arrive on the rows (a docmap join or staged offsets) in any
+    order: postings are docid-sorted within each (term, block) here,
+    and the segment merge (:func:`kernels.segment.build_segments_flat`)
+    restores global docid order per quantum, so no batch or partition
+    has to cover a contiguous docid range. A null ``docid`` (a token
+    row the docmap join found no row for) raises instead of silently
+    losing that document's postings."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = _group_posting_batch(pdf, block_bits)
-            if out is not None:
-                yield out
+    def fn(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-    stage1 = docs.select(
-        "docid", "doc_len", "terms", "tfs", "occs"
-    ).mapInPandas(fn, schema=STAGE1_SCHEMA)
-    if term_filter is not None:
-        # checkpointed builds process deterministic term-hash chunks
-        stage1 = stage1.filter(term_filter("term"))
-    return stage1
+        for batch in batches:
+            docid = batch.column("docid")
+            if docid.null_count:
+                raise ValueError(
+                    "token rows contain keys absent from the docmap — "
+                    "staging is inconsistent"
+                )
+            counts = pc.list_value_length(batch.column("terms")).to_numpy(
+                zero_copy_only=False
+            ).astype(np.int64)
+            flat_terms = batch.column("terms").flatten()
+            if len(flat_terms) == 0:
+                continue
+            occ = (
+                batch.column("occs")
+                .flatten()
+                .to_numpy(zero_copy_only=False)
+                .astype(np.int64)
+            )
+            de = flat_terms.dictionary_encode()
+            codes = de.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+            docids_flat = np.repeat(
+                docid.to_numpy(zero_copy_only=False).astype(np.int64), counts
+            )
+            lens_flat = np.repeat(
+                batch.column("doc_len")
+                .to_numpy(zero_copy_only=False)
+                .astype(np.int64),
+                counts,
+            )
+            block = docids_flat >> block_bits
+            nb = int(block.max()) + 1
+            key = codes * nb + block
+            order = np.lexsort((docids_flat, key))
+            k_s = key[order]
+            starts = np.concatenate(([0], np.flatnonzero(np.diff(k_s)) + 1))
+            offs = np.concatenate((starts, [k_s.size]))
+            o_s = occ[order]
+            # stored tf saturates (memory_index_hash_node.h:140-143);
+            # collection frequency keeps counting every occurrence
+            tf_s = np.minimum(o_s, TF_CAP).astype(np.int32)
+            off32 = pa.array(offs, type=pa.int32())
+            yield pa.RecordBatch.from_arrays(
+                [
+                    de.dictionary.take(pa.array(k_s[starts] // nb)),
+                    pa.array(k_s[starts] % nb, type=pa.int64()),
+                    pa.ListArray.from_arrays(off32, pa.array(docids_flat[order])),
+                    pa.ListArray.from_arrays(off32, pa.array(tf_s)),
+                    pa.ListArray.from_arrays(off32, pa.array(lens_flat[order])),
+                    pa.array(np.diff(offs), type=pa.int64()),
+                    pa.array(np.add.reduceat(o_s, starts), type=pa.int64()),
+                ],
+                names=["term", "block", "docids", "tfs", "lens", "df_b", "cf_b"],
+            )
 
-
-def _group_posting_batch(pdf: pd.DataFrame, block_bits: int) -> pd.DataFrame | None:
-    """One vectorized pass: batch rows (docid, doc_len, terms[], tfs[],
-    occs[]) → per-(term, block) posting-array rows."""
-    if not len(pdf):
-        return None
-    counts = pdf["terms"].str.len().to_numpy(dtype=np.int64)
-    if counts.sum() == 0:
-        return None
-    terms = np.concatenate(pdf["terms"].to_numpy())
-    occs = np.concatenate(pdf["occs"].to_numpy()).astype(np.int64)
-    if "tfs" in pdf.columns:
-        tfs = np.concatenate(pdf["tfs"].to_numpy()).astype(np.int64)
-    else:
-        # side-written token rows carry only the uncapped occurrence
-        # counts; the stored tf saturates (memory_index_hash_node.h:
-        # 140-143) and is derived here in one vectorized min
-        tfs = np.minimum(occs, TF_CAP)
-    docids = np.repeat(pdf["docid"].to_numpy(np.int64), counts)
-    lens = np.repeat(pdf["doc_len"].to_numpy(np.int64), counts)
-    codes, uniq = pd.factorize(terms)
-    # group key: (term, block); docids ascending within batch, so a
-    # stable sort on the key keeps postings docid-ordered
-    block = docids >> block_bits
-    nb = int(block.max()) + 1
-    key = codes.astype(np.int64) * nb + block
-    order = np.argsort(key, kind="stable")
-    k_s = key[order]
-    bounds = np.flatnonzero(np.diff(k_s)) + 1
-    starts = np.concatenate(([0], bounds))
-    d_s, t_s, o_s, l_s = docids[order], tfs[order], occs[order], lens[order]
-    cf_b = np.add.reduceat(o_s, starts)
-    df_b = np.diff(np.concatenate((starts, [k_s.size])))
-    return pd.DataFrame(
-        {
-            "term": np.asarray(uniq, dtype=object)[(k_s[starts] // nb)],
-            "block": k_s[starts] % nb,
-            "docids": np.split(d_s, bounds),
-            "tfs": [a.astype(np.int32) for a in np.split(t_s, bounds)],
-            "lens": np.split(l_s, bounds),
-            "df_b": df_b.astype(np.int64),
-            "cf_b": cf_b.astype(np.int64),
-        }
-    )
-
-
-def build_postings(
-    docs: DataFrame,
-    block_bits: int = 20,
-    blocks_per_seg: int = 4096,
-    term_filter=None,
-) -> tuple[DataFrame, DataFrame]:
-    """(docid, terms[], tfs[], doc_len) rows → (postings, term_stats).
-
-    Stage 2 merges each term's blocks (per segment group) in one Arrow
-    UDF: concat (blocks are disjoint, ascending docid ranges) + impact
-    ordering + vbyte. Terms wider than one segment group become
-    multiple postings rows — stop-term splitting.
-
-    Global per-term stats (df, cf) are derived from the *compact*
-    segment rows (sum of seg_df/seg_cf), not by re-aggregating the
-    exploded posting stream — the expensive stage1 shuffle therefore
-    runs exactly once; the stats join is a segments-count-sized
-    self-join (AQE broadcasts it when small).
-    """
-    return segments_from_stage1(
-        _stage1(docs, block_bits, term_filter), blocks_per_seg
+    return docs.select("docid", "doc_len", "terms", "occs").mapInArrow(
+        fn, schema=STAGE1_SCHEMA
     )
 
 
@@ -1216,34 +983,6 @@ def segments_from_stage1(
 QUANT_POSTINGS_SCHEMA = POSTINGS_SCHEMA + ", df long, cf long"
 
 
-def build_postings_quantized(
-    docs: DataFrame,
-    n_docs: int,
-    mean_doc_len: float,
-    block_bits: int = 20,
-    blocks_per_seg: int = 4096,
-    bits: int = DEFAULT_QUANT_BITS,
-    term_filter=None,
-) -> tuple[DataFrame, DataFrame, float, float]:
-    """Quantized (-Q) build (reference memory_index.c:1541-1589).
-
-    Needs global df per term *before* segment serialisation (the rsv
-    depends on it) and the collection-wide min/max rsv, so this path
-    runs one extra co-partitioned join (stage1 ⋈ term_stats, both
-    already hashed on term — no extra shuffle of the posting payload)
-    and one extra scan for the min/max (reference rsv_all_nodes,
-    memory_index.c:1570-1580). stage1 is persisted across the two
-    passes.
-    """
-    return quantized_segments_from_stage1(
-        _stage1(docs, block_bits, term_filter),
-        n_docs,
-        mean_doc_len,
-        blocks_per_seg,
-        bits,
-    )
-
-
 def quantized_segments_from_stage1(
     stage1: DataFrame,
     n_docs: int,
@@ -1255,6 +994,14 @@ def quantized_segments_from_stage1(
     qminmax: tuple[float, float] | None = None,
     n_shuffle: int | None = None,
 ) -> tuple[DataFrame, DataFrame, float, float]:
+    """Quantized (-Q) segments (reference memory_index.c:1541-1589).
+
+    Needs global df per term *before* segment serialisation (the rsv
+    depends on it) and the collection-wide min/max rsv, so this path
+    runs one extra co-partitioned join (stage1 ⋈ term_stats, both
+    already hashed on term — no extra shuffle of the posting payload)
+    and one extra scan for the min/max (reference rsv_all_nodes,
+    memory_index.c:1570-1580), unless ``qminmax`` supplies it."""
     # stage1 appears twice in the join DAG (directly and under the
     # stats agg) — persist so it is computed once and served from
     # cache; joined is then consumed by both the min/max pass and the
@@ -1655,7 +1402,7 @@ def build_index(
     )
     # key_parts (sorted narrow partitions) stays persisted: the docmap
     # is a cheap vectorized stamp over it, recomputed lazily by its
-    # two consumers (the pass-3 broadcast collect and the final
+    # two consumers (the pass-3 docmap join and the final
     # write_index docmap write) — cheaper than a stage-parquet
     # write+read pair. The pass-1 cache is no longer needed once the
     # sorted partitions are materialized.
@@ -1668,38 +1415,23 @@ def build_index(
             max(n_total, 1), spark.sparkContext.defaultParallelism
         )
 
-    # ---- pass 3: join docids onto the side-written token arrays
-    # (broadcast under docmap_broadcast_max — no payload shuffle at
-    # all; above it, a plain shuffle join = the one payload shuffle
-    # any globally-keyed design pays) and build postings
+    # ---- pass 3: join docids onto the side-written token arrays and
+    # build postings with the one stage-1 kernel. The docmap broadcasts
+    # up to docmap_broadcast_max (no payload shuffle at all); above it
+    # a plain shuffle join is the one payload shuffle any globally-keyed
+    # design pays. A left join: a token row without a docmap row
+    # reaches _stage1 with a null docid, and _stage1 raises on it.
     if n_total == 0:
-        tokens = spark.createDataFrame([], SIDE_TOKENS_SCHEMA)
+        tokens = spark.createDataFrame([], TOKENIZED_SCHEMA)
     else:
         tokens = spark.read.parquet(tokens_dir)
     dm_key = docmap.select("conv_id", "turn_idx", "docid")
     if n_total <= docmap_broadcast_max(spark):
-        # driver-resident docmap: ship it through the task closure and
-        # resolve docids with an indexed pandas lookup inside the
-        # stage1 Arrow pass — same rows a JVM broadcast join would
-        # build its hash table from, minus the BroadcastExchange and
-        # the join stage
-        tok_staged = tokens.join(F.broadcast(dm_key), ["conv_id", "turn_idx"]).select(
-            "docid", "doc_len", "terms", "occs"
-        )
-        dm_pdf = dm_key.toPandas()
-        stage1 = _stage1_from_tokens(
-            tokens.select("conv_id", "turn_idx", "doc_len", "terms", "occs"),
-            block_bits,
-            docid_pdf=dm_pdf,
-        )
-    else:
-        # at-scale path: the one payload shuffle any globally-keyed
-        # design pays
-        joined_tokens = tokens.join(dm_key, ["conv_id", "turn_idx"]).select(
-            "docid", "doc_len", "terms", "occs"
-        )
-        tok_staged = joined_tokens
-        stage1 = _stage1_from_tokens(joined_tokens, block_bits)
+        dm_key = F.broadcast(dm_key)
+    tok_staged = tokens.join(dm_key, ["conv_id", "turn_idx"], "left").select(
+        "docid", "doc_len", "terms", "occs"
+    )
+    stage1 = _stage1(tok_staged, block_bits)
 
     keep = _cull_predicate(
         max(n_total, 1),

@@ -38,9 +38,9 @@ from atire_spark.build import (
     IndexTables,
     _stage1,
     assign_docids,
-    build_postings,
     quant_minmax_from_stage1,
     quantized_segments_from_stage1,
+    segments_from_stage1,
     tokenize_stage,
 )
 
@@ -189,8 +189,15 @@ def build_index_checkpointed(
             ),
         )
 
-    # ---- phase: quantminmax (only for -Q; chunked by term hash) --------
     docs = spark.read.parquet(f"{workdir}/docs")
+
+    def chunk_stage1(chunk: int) -> DataFrame:
+        """Stage-1 rows of the terms in one term-hash chunk."""
+        return _stage1(docs, block_bits).filter(
+            F.pmod(F.xxhash64("term"), F.lit(n_term_chunks)) == chunk
+        )
+
+    # ---- phase: quantminmax (only for -Q; chunked by term hash) --------
     n_docs = mean_len = 0
     if quantize_bits is not None:
         row = (
@@ -211,15 +218,7 @@ def build_index_checkpointed(
             if chunk in done:
                 continue
             t0 = time.monotonic()
-            s1 = _stage1(
-                docs,
-                block_bits,
-                lambda c, n=n_term_chunks, k=chunk: F.pmod(
-                    F.xxhash64(c), F.lit(n)
-                )
-                == k,
-            )
-            mm = quant_minmax_from_stage1(s1, n_docs, mean_len)
+            mm = quant_minmax_from_stage1(chunk_stage1(chunk), n_docs, mean_len)
             spark.createDataFrame(
                 [mm] if mm is not None else [], "mn double, mx double"
             ).write.mode("overwrite").parquet(f"{workdir}/quant/chunk={chunk}")
@@ -249,12 +248,9 @@ def build_index_checkpointed(
         if chunk in done:
             continue
         t0 = time.monotonic()
-        tf = lambda c, n=n_term_chunks, k=chunk: (
-            F.pmod(F.xxhash64(c), F.lit(n)) == k
-        )
         if quantize_bits is not None:
             postings, _ts, _mn, _mx = quantized_segments_from_stage1(
-                _stage1(docs, block_bits, tf),
+                chunk_stage1(chunk),
                 n_docs,
                 mean_len,
                 blocks_per_seg,
@@ -262,10 +258,7 @@ def build_index_checkpointed(
                 qminmax=(qmin, qmax),
             )
         else:
-            postings, _ = build_postings(
-                docs, block_bits=block_bits, blocks_per_seg=blocks_per_seg,
-                term_filter=tf,
-            )
+            postings, _ = segments_from_stage1(chunk_stage1(chunk), blocks_per_seg)
         postings.write.mode("overwrite").parquet(f"{workdir}/postings/chunk={chunk}")
         m = (
             spark.read.parquet(f"{workdir}/postings/chunk={chunk}")

@@ -114,12 +114,12 @@ def _seg_rows(batch, cum_before: bool = False) -> Iterator[_Seg]:
 class _Resident:
     """The reference's ``-M`` in-memory index (search_engine.c:52-55)
     on the driver, the only row source of a driver-placed batch: the
-    whole postings table as Arrow, sorted by term so a query's rows are
-    one binary search per term, and the docmap's names, sorted by
-    docid. Loaded once per engine."""
+    postings columns a scorer reads (``_SEG_FIELDS``) as Arrow, sorted
+    by term so a query's rows are one binary search per term, and the
+    docmap's names, sorted by docid. Loaded once per engine."""
 
     def __init__(self, index: IndexTables):
-        self.postings = index.postings.toArrow().sort_by("term")
+        self.postings = index.postings.select(*_SEG_FIELDS).toArrow().sort_by("term")
         self.terms = self.postings["term"].to_numpy()
         names = index.docmap.select("docid", _doc_name()).toArrow().sort_by("docid")
         self.docids = names["docid"].to_numpy()
@@ -127,11 +127,12 @@ class _Resident:
 
     def rows(self, terms: list[str]) -> pa.Table:
         """The postings rows of ``terms``: what
-        ``postings.filter(term isin terms)`` returns, as Arrow."""
+        ``postings.filter(term isin terms).select(*_SEG_FIELDS)``
+        returns, as Arrow."""
         lo = np.searchsorted(self.terms, terms, side="left")
         hi = np.searchsorted(self.terms, terms, side="right")
         take = np.concatenate([np.arange(a, b) for a, b in zip(lo, hi)])
-        return self.postings.select(_SEG_FIELDS).take(take)
+        return self.postings.take(take)
 
     def names_of(self, docids: list[int]) -> dict[int, str]:
         """docid → name, for the docids with a docmap row."""

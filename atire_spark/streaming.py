@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from atire_spark.build import (
     IndexTables,
     _range_bounds,
-    _stage1_from_staged,
+    _stage1,
     _stage_sorted,
     segments_from_stage1,
     tokenize_stage,
@@ -125,94 +125,80 @@ def append_batch(
         batch, stemmer=stemmer, stop_before_indexing=stop_before_indexing
     )
     n_ranges = max(spark.sparkContext.defaultParallelism, 4)
-    # the staged batch is read by every write below; nothing reads it
-    # once the epoch is recorded
+    bounds, n_turns = _range_bounds(batch, n_ranges)
+    rows = nbytes = 0
+    # the staged batch is read by every write below and by nothing
+    # after them
     with tempfile.TemporaryDirectory(
         prefix="atire_stream_stage_", ignore_cleanup_errors=True
     ) as stage_dir:
         staged, offsets, n_new, _coll_len = _stage_sorted(
-            tokenized,
-            stage_dir,
-            num_ranges=n_ranges,
-            bounds=_range_bounds(batch, n_ranges),
+            tokenized, stage_dir, num_ranges=n_ranges, bounds=bounds
         )
-        if n_new == 0:
-            _write_state(
-                index_dir,
-                {
-                    "n_docs": base,
-                    "last_epoch": int(epoch_id),
-                    "stemmer": stemmer or "",
-                },
+        if n_new:
+            # this batch's docids continue past everything already
+            # indexed; one frame feeds both the docmap and stage 1. The
+            # per-bucket offsets ride in the plan as a literal map: a
+            # broadcast join of a driver-made offsets frame would cost
+            # one Spark job in each query that reads the frame
+            offset = F.create_map(
+                *[
+                    c
+                    for pid, off in sorted(offsets.items())
+                    for c in (F.lit(pid), F.lit(base + off).cast("long"))
+                ]
             )
-            _append_ingest_log(
-                spark,
-                index_dir,
-                {
-                    "epoch": int(epoch_id),
-                    "docs_added": 0,
-                    "turns_seen": None,
-                    "postings_rows": 0,
-                    "postings_bytes": 0,
-                    "wall_sec": round(_time.monotonic() - t0, 3),
-                },
+            docs = staged.select(
+                (offset[F.col("pid")] + F.col("local_idx")).cast("long").alias("docid"),
+                "conv_id",
+                "turn_idx",
+                "doc_len",
+                "terms",
+                "occs",
             )
-            return 0
-        # shift this batch's docids past everything already indexed
-        offsets = {pid: off + base for pid, off in offsets.items()}
-
-        docmap = staged.join(
-            F.broadcast(
-                spark.createDataFrame(
-                    [(int(p), int(o)) for p, o in sorted(offsets.items())],
-                    "pid int, docid_offset long",
-                )
-            ),
-            "pid",
-        ).select(
-            (F.col("docid_offset") + F.col("local_idx")).cast("long").alias("docid"),
-            "conv_id",
-            "turn_idx",
-            "doc_len",
-        )
-        stage1 = _stage1_from_staged(staged, offsets, STREAM_BLOCK_BITS)
-        registry: list = []
-        postings, term_stats = segments_from_stage1(stage1, 1, registry=registry)
-        seg_cols = [c for c in postings.columns if c not in ("df", "cf")]
-        postings.select(*seg_cols).write.mode("append").parquet(
-            f"{index_dir}/segments"
-        )
-        term_stats.write.mode("append").parquet(f"{index_dir}/term_stats")
-        docmap.write.mode("append").parquet(f"{index_dir}/docmap")
-        # per-epoch metrics over the persisted stage (one extra agg job,
-        # no re-tokenize): segment rows emitted + compressed posting bytes
-        m = postings.agg(
-            F.count("*").alias("rows"),
-            F.sum(F.length("postings")).alias("bytes"),
-        ).collect()[0]
-        for df_ in registry:
-            df_.unpersist()
-        _write_state(
-            index_dir,
-            {
-                "n_docs": base + n_new,
-                "last_epoch": int(epoch_id),
-                "stemmer": stemmer or "",
-            },
-        )
-        _append_ingest_log(
-            spark,
-            index_dir,
-            {
-                "epoch": int(epoch_id),
-                "docs_added": int(n_new),
-                "turns_seen": None,
-                "postings_rows": int(m["rows"]),
-                "postings_bytes": int(m["bytes"] or 0),
-                "wall_sec": round(_time.monotonic() - t0, 3),
-            },
-        )
-        return n_new
+            registry: list = []
+            postings, term_stats = segments_from_stage1(
+                _stage1(docs, STREAM_BLOCK_BITS), 1, registry=registry
+            )
+            seg_cols = [c for c in postings.columns if c not in ("df", "cf")]
+            postings.select(*seg_cols).write.mode("append").parquet(
+                f"{index_dir}/segments"
+            )
+            term_stats.write.mode("append").parquet(f"{index_dir}/term_stats")
+            docs.select("docid", "conv_id", "turn_idx", "doc_len").write.mode(
+                "append"
+            ).parquet(f"{index_dir}/docmap")
+            # per-epoch metrics over the persisted stage (one extra agg
+            # job, no re-tokenize): segment rows emitted + compressed
+            # posting bytes
+            m = postings.agg(
+                F.count("*").alias("rows"),
+                F.sum(F.length("postings")).alias("bytes"),
+            ).collect()[0]
+            rows, nbytes = int(m["rows"]), int(m["bytes"] or 0)
+            for df_ in registry:
+                df_.unpersist()
+    _write_state(
+        index_dir,
+        {
+            "n_docs": base + n_new,
+            "last_epoch": int(epoch_id),
+            "stemmer": stemmer or "",
+        },
+    )
+    _append_ingest_log(
+        spark,
+        index_dir,
+        {
+            "epoch": int(epoch_id),
+            "docs_added": int(n_new),
+            "turns_seen": int(n_turns),
+            "postings_rows": rows,
+            "postings_bytes": nbytes,
+            "wall_sec": round(_time.monotonic() - t0, 3),
+        },
+    )
+    return n_new
 
 
 def stream_build(

@@ -51,6 +51,27 @@ def test_shuffle_join_docid_path_identical(spark, monkeypatch):
     assert a == b
 
 
+def test_token_row_without_docmap_row_raises(spark, monkeypatch):
+    """A side-written token row whose key has no docmap row fails the
+    build in the stage-1 kernel instead of silently dropping that
+    document's postings, under the broadcast docmap join and under
+    the shuffle join BROADCAST_DOCMAP_MAX=0 forces."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    real = B._docids_from_keys
+
+    def lossy(*args):
+        parts, docmap, n, coll_len = real(*args)
+        return parts, docmap.filter(F.col("conv_id") != "c003"), n, coll_len
+
+    monkeypatch.setattr(B, "_docids_from_keys", lossy)
+    for cap in (B.BROADCAST_DOCMAP_MAX, 0):
+        monkeypatch.setattr(B, "BROADCAST_DOCMAP_MAX", cap)
+        with pytest.raises(Exception, match="absent from the docmap"):
+            build_index(spark, spark.createDataFrame(TRANSCRIPTS)).postings.collect()
+
+
 def test_shuffle_sizing_shape():
     f = B.shuffle_partitions_for_tokens
     # small corpora: one partition per core, never fewer
@@ -141,7 +162,6 @@ def _tokenized_frame(spark, rows):
             "turn_idx": [r[1] for r in rows],
             "doc_len": [r[2] for r in rows],
             "terms": [r[3] for r in rows],
-            "tfs": [[1] * len(r[3]) for r in rows],
             "occs": [[1] * len(r[3]) for r in rows],
         }
     )

@@ -406,6 +406,9 @@ class TestRankIdentity:
         assert n_jobs == 0 and _placement_of(df) == "resident"
         for qid, qtext in batch:
             _assert_ranked(got, qid, small_oracle.search(qtext, k=10), qtext)
+        # the resident table holds only the columns the scorer reads
+        resident = small_engine._resident()
+        assert resident.postings.column_names == list(query_mod._SEG_FIELDS)
 
     def test_resident_index_loads_once_under_concurrent_first_queries(
         self, spark, small_engine, monkeypatch

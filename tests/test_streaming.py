@@ -81,6 +81,53 @@ def test_incremental_appends_match_batch_build(spark, stream_dirs):
         assert _rsv_by_doc(streamed, q) == _rsv_by_doc(batch, q)
 
 
+def test_single_batch_stream_postings_bytes_match_batch_build(spark, stream_dirs):
+    """One appended batch writes the same docmap and the same segment
+    bytes (postings and doc_lens) as a batch build with the stream's
+    geometry over the same rows: both run the one stage-1 kernel."""
+    from atire_spark.build import build_index
+    from atire_spark.streaming import STREAM_BLOCK_BITS, append_batch
+    from atire_spark.synth import make_transcripts
+
+    index_dir, _ = stream_dirs
+    os.makedirs(index_dir, exist_ok=True)
+    tdf = spark.createDataFrame(make_transcripts("tiny"))
+    assert append_batch(spark, tdf, index_dir, 0) > 0
+    direct = build_index(spark, tdf, block_bits=STREAM_BLOCK_BITS, blocks_per_seg=1)
+
+    def segments(df):
+        return sorted(
+            (r["term"], r["seg_group"], bytes(r["postings"]), bytes(r["doc_lens"]))
+            for r in df.select("term", "seg_group", "postings", "doc_lens").collect()
+        )
+
+    def docmap(df):
+        return sorted(tuple(r) for r in df.select(*direct.docmap.columns).collect())
+
+    assert segments(spark.read.parquet(f"{index_dir}/segments")) == segments(
+        direct.postings
+    )
+    assert docmap(spark.read.parquet(f"{index_dir}/docmap")) == docmap(direct.docmap)
+
+
+def test_ingest_log_counts_turns_seen(spark, stream_dirs):
+    """turns_seen counts every turn of the batch, empty ones included;
+    docs_added counts only the turns that got a docid."""
+    from atire_spark.streaming import append_batch, read_ingest_log
+
+    index_dir, _ = stream_dirs
+    os.makedirs(index_dir, exist_ok=True)
+    empty = pd.DataFrame({"conv_id": ["e0"], "turn_idx": [0], "text": [""]})
+    assert append_batch(spark, spark.createDataFrame(BATCH2), index_dir, 0) == 2
+    assert append_batch(spark, spark.createDataFrame(empty), index_dir, 1) == 0
+    log = read_ingest_log(spark, index_dir).orderBy("epoch").collect()
+    assert [(r["epoch"], r["turns_seen"], r["docs_added"]) for r in log] == [
+        (0, 3, 2),
+        (1, 1, 0),
+    ]
+    assert log[1]["postings_rows"] == 0 and log[1]["postings_bytes"] == 0
+
+
 def test_epoch_replay_is_idempotent(spark, stream_dirs):
     from atire_spark.streaming import append_batch, load_stream_index
 

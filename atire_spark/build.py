@@ -9,9 +9,11 @@ reference                                   → this engine
 (directory_iterator_preindex.c:56-80)        in mapInPandas (Arrow)
 per-doc 256-bucket hash of term→tf           one np.unique over (row,
 (memory_index_one.c)                         term) codes per batch
-serial docno assignment in doclist order     range-partition by
-(atire/index.c:507-525)                      (conv_id, turn_idx) + per-
-                                             partition offsets (two-pass)
+serial docno assignment in doclist order     range-bucket sort of the
+(atire/index.c:507-525)                      narrow (conv_id, turn_idx)
+                                             keys + per-bucket offsets
+                                             (_docids_from_keys, every
+                                             build path)
 global hash-of-trees posting accumulation    per-(term, docid-block)
 (memory_index.c:126-308)                     arrays, one Arrow pass per
                                              batch (_stage1)
@@ -169,12 +171,12 @@ def tokenize_stage(
     )
 
 
-# ------------------------------------------ single-tokenize build (fast path)
+# ------------------------------------------ single-tokenize build
 KEYS_SCHEMA = "conv_id string, turn_idx int, doc_len long"
 # docmaps up to this many rows MAY broadcast in the docid join
-# (pass 3); larger corpora fall back to a shuffle join — the same
-# single payload shuffle the classic range-staged path pays, so scale
-# posture is unchanged, while every corpus under the threshold
+# (pass 3); larger corpora fall back to a shuffle join — the single
+# payload shuffle any globally-keyed design pays, while every corpus
+# under the threshold
 # (including each PART of a split+merge build, the reference's own
 # recipe for 100 GB+ collections, reference README.md:78-86) skips the
 # payload shuffle entirely. The HARD cap below is gated by the actual
@@ -258,23 +260,22 @@ def _tokenize_sidewrite(
     worker (pyarrow, no JVM round-trip of the arrays), and emit only
     the NARROW key rows (conv_id, turn_idx, doc_len) back to Spark.
 
-    Rationale: the token arrays are the build's dominant payload; the
-    classic staged path moved them through Arrow→JVM, a hash shuffle, a
-    JVM sort, a second Arrow round-trip (stamping) and a JVM parquet
-    write before stage1 could read them back. Docid assignment only
-    needs the KEYS, so this pass parts the payload from the keys: the
-    arrays go to ``tokens_dir`` once (written as Arrow list arrays
-    directly off the flat token stream — no per-row Python lists), and
-    the key rows (tiny) drive the global docid sort.
+    Rationale: the token arrays are the build's dominant payload, and
+    docid assignment only needs the KEYS. A sort of the whole tokenized
+    rows would move the arrays through Arrow→JVM, a shuffle, a JVM sort
+    and a staged write before stage 1 could read them back; this pass
+    parts the payload from the keys instead: the arrays go to
+    ``tokens_dir`` once (written as Arrow list arrays directly off the
+    flat token stream — no per-row Python lists), and the key rows
+    (tiny) drive the global docid sort (:func:`_docids_from_keys`).
 
     Semantics are identical to :func:`tokenize_stage` (stemmer /
     stop_before_indexing / CJK flags included): doc_len counts
     surviving WORD+NUMBER tokens before stopping/stemming, stopped
     tokens get no postings, stems count via the batch vocabulary remap.
     Rows with doc_len == 0 are side-written nowhere (they never get a
-    docid) but still emit a key row so the duplicate-key check sees
-    EVERY input row, not just the indexable ones. NULL keys fail here,
-    exhaustively — acceptance never depends on sampling.
+    docid) but still emit a key row so the NULL- and duplicate-key
+    checks of pass 2 see EVERY input row, not just the indexable ones.
 
     Each task writes ``part-<partition>.parquet`` via a hidden
     temporary name + rename, so a retried task simply overwrites its
@@ -316,12 +317,6 @@ def _tokenize_sidewrite(
                     continue
                 conv = pdf["conv_id"].to_numpy()
                 turn = pdf["turn_idx"].to_numpy()
-                if pd.isna(conv).any() or pd.isna(turn).any():
-                    raise ValueError(
-                        "transcripts key columns (conv_id, turn_idx) "
-                        "contain NULLs; every turn needs a non-null key "
-                        "for stable docid assignment"
-                    )
                 row_idx, flat, lens = tokenize_flat(
                     pdf["text"],
                     cjk_bigrams=cjk_bigrams,
@@ -347,7 +342,11 @@ def _tokenize_sidewrite(
                     table = pa.Table.from_arrays(
                         [
                             pa.array(conv[kept], type=pa.string()),
-                            pa.array(turn[kept], type=pa.int32()),
+                            # a NULL turn_idx arrives as NaN: keep it
+                            # null for pass 2's key check
+                            pa.array(
+                                turn[kept], type=pa.int32(), from_pandas=True
+                            ),
                             pa.array(lens[kept], type=pa.int64()),
                             pa.ListArray.from_arrays(
                                 offs32, pa.array(terms_flat, type=pa.string())
@@ -396,20 +395,17 @@ def _key_bounds(
     recompute reproduces the same bounds — unlike repartitionByRange,
     whose per-execution sampling can shift partition boundaries
     between the offset-collect and a later recompute of the same
-    frame, silently reassigning docids)."""
+    frame, silently reassigning docids). NULL keys are left out of the
+    sample; the bucket assignment rejects them, over every row."""
     if n_rows == 0:
         return []
     frac = min(1.0, (n_buckets * 128.0) / n_rows)
     rows = (
         keys.select("conv_id", "turn_idx")
+        .dropna()
         .sample(fraction=frac, seed=13)
         .collect()
     )
-    if any(r["conv_id"] is None or r["turn_idx"] is None for r in rows):
-        raise ValueError(
-            "transcripts key columns (conv_id, turn_idx) contain NULLs; "
-            "every turn needs a non-null key for stable docid assignment"
-        )
     skeys = sorted((r["conv_id"], int(r["turn_idx"])) for r in rows)
     if not skeys:
         return []
@@ -438,6 +434,11 @@ def _docids_from_keys(
     pure deterministic function of the input, so a cache-miss
     recompute of the returned docmap reproduces identical docids.
 
+    The one docid assigner: the batch build, the stream append and the
+    checkpointed build all pass their key rows through it, so the
+    bucket assignment is also where a NULL key fails, exhaustively —
+    acceptance never depends on sampling.
+
     Returns (persisted narrow partitions, docmap rows, total docs,
     collection length). The caller keeps the narrow partitions
     persisted while the docmap is in use (registry) — the stamp is a
@@ -452,6 +453,14 @@ def _docids_from_keys(
                 continue
             conv = pdf["conv_id"].to_numpy()
             turn = pdf["turn_idx"].to_numpy()
+            if pd.isna(conv).any() or pd.isna(turn).any():
+                # a NULL key has no place in the stable (conv_id,
+                # turn_idx) order docids derive from
+                raise ValueError(
+                    "transcripts key columns (conv_id, turn_idx) "
+                    "contain NULLs; every turn needs a non-null key "
+                    "for stable docid assignment"
+                )
             bucket = np.zeros(len(pdf), dtype=np.int32)
             for c, t in bkeys:
                 bucket += ((conv > c) | ((conv == c) & (turn >= t))).astype(
@@ -509,9 +518,13 @@ def _docids_from_keys(
             }
         )
 
-    rows = parts.mapInPandas(
-        count_fn, schema="pid int, cnt long, dl long"
-    ).collect()
+    try:
+        rows = parts.mapInPandas(
+            count_fn, schema="pid int, cnt long, dl long"
+        ).collect()
+    except Exception:  # a NULL or duplicate key: release the partitions
+        parts.unpersist()
+        raise
     counts: dict[int, int] = {}
     coll_len = 0
     for r in rows:
@@ -549,234 +562,86 @@ def _docids_from_keys(
     return parts, docmap, acc, coll_len
 
 
-# ---------------------------------------------------------- docid assignment
-def _sorted_partitions(
-    tokenized: DataFrame, num_ranges: int | None = None
-) -> tuple[DataFrame, dict[int, int], int]:
-    """Range-partition + sort the non-empty tokenized rows by
-    (conv_id, turn_idx) and return (cached partitions, per-partition
-    docid offsets). Empty docs are dropped first so they never consume
-    an id (reference atire/index.c:533-540).
+def _join_docids(tokens: DataFrame, docmap: DataFrame, n_docs: int) -> DataFrame:
+    """Pass 3: the ``tokens ⋈ docmap`` left join on (conv_id,
+    turn_idx). The docmap broadcasts up to :func:`docmap_broadcast_max`
+    rows (no payload shuffle at all); above it a plain shuffle join is
+    the one payload shuffle any globally-keyed design pays. A token row
+    without a docmap row keeps a null docid, and :func:`_stage1` raises
+    on it."""
+    dm_key = docmap.select("conv_id", "turn_idx", "docid")
+    if n_docs <= docmap_broadcast_max(tokens.sparkSession):
+        dm_key = F.broadcast(dm_key)
+    return tokens.join(dm_key, ["conv_id", "turn_idx"], "left")
 
-    Scalable two-pass: count per partition, then per-partition offset +
-    local index — no global window, no driver collect of data (only P
-    partition counts).
-    """
+
+def _docid_token_rows(
+    spark: SparkSession,
+    transcripts: DataFrame,
+    stage_dir: str,
+    stemmer: str | None = None,
+    stop_before_indexing: str | None = None,
+    cjk_bigrams: bool = False,
+    cjk_segmenter=None,
+) -> tuple[DataFrame, DataFrame, int, int, int, DataFrame]:
+    """Passes 1-3 of a build from raw transcripts, shared by
+    :func:`build_index` and :func:`atire_spark.streaming.append_batch`:
+
+    1. tokenize ONCE; the token arrays go straight to
+       ``stage_dir/tokens`` from the workers (:func:`_tokenize_sidewrite`)
+       and only the narrow key rows come back, counted once;
+    2. global docid assignment over those keys
+       (:func:`_docids_from_keys`);
+    3. the docids joined back onto the token arrays
+       (:func:`_join_docids`).
+
+    Returns (docid-carrying rows ``docid, doc_len, terms, occs`` for
+    :func:`_stage1`, docmap, documents, collection length, input rows,
+    key partitions). The docmap is a cheap stamp over the persisted key
+    partitions, recomputed by each consumer; the caller unpersists the
+    partitions once the rows and the docmap are written."""
+    import os
+
     from pyspark import StorageLevel
 
-    # cache the tokenized rows: the range partitioner's sampling pass
-    # and the sort would otherwise each re-run the tokenizer UDF.
-    # DISK_ONLY on purpose: these rows carry the token arrays, and
-    # keeping hundreds of thousands of array objects on the JVM heap
-    # turns every later pass into a GC storm — local disk reads are
-    # cheaper than the collector.
-    non_empty = tokenized.filter(F.col("doc_len") > 0).persist(
-        StorageLevel.DISK_ONLY
+    tokens_dir = f"{stage_dir}/tokens"
+    os.makedirs(tokens_dir, exist_ok=True)
+    # a reused stage_dir from a PRIOR build may hold more part files
+    # than this run's input has partitions; spark.read.parquet would
+    # silently mix the stale parts in (duplicate postings the key
+    # check cannot see). The token side-write is per-build output, not
+    # a resume checkpoint (that is checkpoint.py's workdir), so clear
+    # the directory first.
+    for stale in os.listdir(tokens_dir):
+        if stale.startswith(("part-", ".part-")):
+            os.remove(f"{tokens_dir}/{stale}")
+    # materialize pass 1 exactly once into the block cache (three
+    # scalar columns — tiny next to the side-written token payload):
+    # the bounds sample and the key shuffle read the cache instead of
+    # re-running the tokenizer
+    keys = _tokenize_sidewrite(
+        transcripts,
+        tokens_dir,
+        stemmer=stemmer,
+        stop_before_indexing=stop_before_indexing,
+        cjk_bigrams=cjk_bigrams,
+        cjk_segmenter=cjk_segmenter,
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        n_keys = keys.count()
+        key_parts, docmap, n_docs, coll_len = _docids_from_keys(
+            keys, max(spark.sparkContext.defaultParallelism, 4), n_keys
+        )
+    finally:
+        keys.unpersist()  # the sorted key partitions hold the rows now
+    if n_docs == 0:
+        tokens = spark.createDataFrame([], TOKENIZED_SCHEMA)
+    else:
+        tokens = spark.read.parquet(tokens_dir)
+    rows = _join_docids(tokens, docmap, n_docs).select(
+        "docid", "doc_len", "terms", "occs"
     )
-    n_parts = num_ranges or max(non_empty.sparkSession.sparkContext.defaultParallelism, 4)
-    parts = non_empty.repartitionByRange(
-        n_parts, "conv_id", "turn_idx"
-    ).sortWithinPartitions("conv_id", "turn_idx")
-    parts = parts.persist(StorageLevel.DISK_ONLY)
-
-    def count_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid = TaskContext.get().partitionId()
-        n = 0
-        for pdf in batches:
-            n += len(pdf)
-        yield pd.DataFrame({"pid": [pid], "cnt": [n]})
-
-    counts = {
-        int(r["pid"]): int(r["cnt"])
-        for r in parts.mapInPandas(count_fn, schema="pid int, cnt long").collect()
-    }
-    non_empty.unpersist()  # parts now holds the materialized rows
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    return parts, offsets, acc
-
-
-def _range_bounds(
-    transcripts: DataFrame, n_buckets: int
-) -> tuple[list[tuple[str, int]], int]:
-    """(range-bucket bounds, row count) over (conv_id, turn_idx),
-    sampled from the RAW transcripts. repartitionByRange on the
-    tokenized frame would run its sampling pass over the token arrays
-    (an extra materialization of the expensive columns); sampling the
-    two key columns of the raw input costs one cheap column-pruned
-    scan."""
-    n = transcripts.count()
-    return _key_bounds(transcripts, n_buckets, n), n
-
-
-def _stage_sorted(
-    tokenized: DataFrame,
-    stage_dir: str,
-    num_ranges: int | None = None,
-    bounds: list[tuple[str, int]] | None = None,
-) -> tuple[DataFrame, dict[int, int], int, int]:
-    """Bucket + sort the non-empty tokenized rows by (conv_id,
-    turn_idx) and stage them to parquet with (pid, local_idx) stamped,
-    returning (staged frame, per-bucket docid offsets, total docs,
-    collection length).
-
-    ``pid`` is an ORDERED range-bucket id (bucket i's keys all sort
-    before bucket i+1's), assigned vectorized against the sampled
-    ``bounds``; rows hash-shuffle on it (a bucket never splits), sort
-    within partitions by (pid, conv_id, turn_idx), and stream to
-    parquet in ONE pass — the tokenizer output is materialized exactly
-    once, with no repartitionByRange sampling pass or JVM/disk cache
-    roundtrip of the token arrays.
-
-    ``docid = offsets[pid] + local_idx`` is then pure columnar
-    arithmetic — later passes read the staged parquet (column-pruned,
-    GC-free), and the staged directory doubles as a durable build
-    checkpoint: tokenize + global sort never re-run.
-    """
-    spark = tokenized.sparkSession
-    n_parts = num_ranges or max(spark.sparkContext.defaultParallelism, 4)
-    bnds = bounds or []
-    bkeys = [(str(c), int(t)) for c, t in bnds]
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            conv = pdf["conv_id"].to_numpy()
-            turn = pdf["turn_idx"].to_numpy()
-            if pd.isna(conv).any() or pd.isna(turn).any():
-                # loud + actionable instead of a TypeError deep in the
-                # bucket comparison: a NULL key cannot participate in
-                # the stable (conv_id, turn_idx) ordering docids (and
-                # the per-turn text-equality invariant) derive from
-                raise ValueError(
-                    "transcripts key columns (conv_id, turn_idx) "
-                    "contain NULLs; every turn needs a non-null key "
-                    "for stable docid assignment"
-                )
-            bucket = np.zeros(len(pdf), dtype=np.int32)
-            for c, t in bkeys:
-                bucket += ((conv > c) | ((conv == c) & (turn >= t))).astype(
-                    np.int32
-                )
-            pdf = pdf.copy()
-            pdf.insert(0, "pid", bucket)
-            yield pdf
-
-    # ALL rows (including empty-tokenizing turns) flow through assign
-    # and the stamp's duplicate check below: NULL-key and duplicate-key
-    # acceptance is exhaustive and deterministic for every input row —
-    # never dependent on whether a doc_len==0 row happened to be
-    # sampled or filtered first (matching _tokenize_sidewrite /
-    # _docids_from_keys on the fast path). Empty rows carry empty token
-    # arrays, so shipping them through the key shuffle is ~free; they
-    # are dropped AFTER the check, before staging.
-    parts = (
-        tokenized.mapInPandas(assign, schema="pid int, " + TOKENIZED_SCHEMA)
-        .repartition(n_parts, "pid")
-        .sortWithinPartitions("pid", "conv_id", "turn_idx")
-    )
-
-    def stamp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # per-bucket running index; a hash partition may hold several
-        # whole buckets and a bucket may span Arrow batches
-        seen: dict[int, int] = {}
-        prev_key: tuple | None = None  # last (conv, turn) of prior batch
-        for pdf in batches:
-            pdf = pdf.reset_index(drop=True)
-            b = pdf["pid"].to_numpy()
-            # duplicate-key detection is FREE here: rows are sorted by
-            # (pid, conv_id, turn_idx) and a key's bucket never splits,
-            # so any duplicate is adjacent (possibly across an Arrow
-            # batch boundary). A duplicated key would make docid
-            # assignment depend on shuffle arrival order — silently
-            # breaking the stable-ordering / resume invariant.
-            if len(pdf):
-                conv_k = pdf["conv_id"].to_numpy()
-                turn_k = pdf["turn_idx"].to_numpy()
-                dup = (conv_k[1:] == conv_k[:-1]) & (turn_k[1:] == turn_k[:-1])
-                first = (
-                    prev_key is not None
-                    and (conv_k[0], turn_k[0]) == prev_key
-                )
-                if first or dup.any():
-                    i = 0 if first else int(np.flatnonzero(dup)[0]) + 1
-                    raise ValueError(
-                        "duplicate transcripts key (conv_id="
-                        f"{conv_k[i]!r}, turn_idx={turn_k[i]!r}): "
-                        "(conv_id, turn_idx) must uniquely identify a "
-                        "turn for stable docid assignment"
-                    )
-                prev_key = (conv_k[-1], turn_k[-1])
-            idx = np.zeros(len(pdf), dtype=np.int64)
-            keep = np.ones(len(pdf), dtype=bool)
-            if len(pdf):
-                # empty docs were dup-checked above but never consume a
-                # docid (reference atire/index.c:533-540): local_idx is
-                # dense over the doc_len > 0 survivors only, and the
-                # empty rows are dropped from the staged output here
-                keep = pdf["doc_len"].to_numpy(np.int64) > 0
-                change = np.flatnonzero(np.diff(b)) + 1
-                starts = np.concatenate(([0], change))
-                ends = np.concatenate((change, [len(b)]))
-                for s, e in zip(starts, ends):
-                    base = seen.get(int(b[s]), 0)
-                    k = keep[s:e]
-                    nk = int(k.sum())
-                    idx[s:e][k] = base + np.arange(nk, dtype=np.int64)
-                    seen[int(b[s])] = base + nk
-            pdf.insert(1, "local_idx", idx)
-            yield pdf.loc[keep]
-
-    parts.mapInPandas(
-        stamp, schema="pid int, local_idx long, " + TOKENIZED_SCHEMA
-    ).write.mode("overwrite").parquet(stage_dir)
-
-    staged = spark.read.parquet(stage_dir)
-    # one scalar pass also carries the collection length: the stats
-    # row then needs NO further docmap scan (documents / coll_len /
-    # mean become literals), saving two jobs per build
-    rows = (
-        staged.groupBy("pid")
-        .agg(F.count("*").alias("cnt"), F.sum("doc_len").alias("dl"))
-        .collect()
-    )
-    counts = {int(r["pid"]): int(r["cnt"]) for r in rows}
-    coll_len = sum(int(r["dl"] or 0) for r in rows)
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    return staged, offsets, acc, coll_len
-
-
-def _docid_batches(
-    batches: Iterator[pd.DataFrame], offsets: dict[int, int]
-) -> Iterator[pd.DataFrame]:
-    """Stamp dense docids onto sorted-partition batches."""
-    pid = TaskContext.get().partitionId()
-    base = offsets.get(pid, 0)
-    seen = 0
-    for pdf in batches:
-        pdf = pdf.reset_index(drop=True)
-        pdf.insert(0, "docid", base + seen + np.arange(len(pdf), dtype=np.int64))
-        seen += len(pdf)
-        yield pdf
-
-
-def assign_docids(tokenized: DataFrame, num_ranges: int | None = None) -> DataFrame:
-    """Dense 0-based docids by stable (conv_id, turn_idx) order (full
-    tokenized rows — the checkpointed build materializes these)."""
-    parts, offsets, _ = _sorted_partitions(tokenized, num_ranges)
-
-    def fn(batches):
-        yield from _docid_batches(batches, offsets)
-
-    return parts.mapInPandas(fn, schema="docid long, " + TOKENIZED_SCHEMA)
+    return rows, docmap, n_docs, coll_len, n_keys, key_parts
 
 
 # ---------------------------------------------------------- postings build
@@ -800,9 +665,9 @@ def _stage1(docs: DataFrame, block_bits: int) -> DataFrame:
     rows, not one row per posting; a stop-term arrives as many bounded
     rows (≤ one block each), the salt that keeps reducers balanced.
 
-    Docids arrive on the rows (a docmap join or staged offsets) in any
-    order: postings are docid-sorted within each (term, block) here,
-    and the segment merge (:func:`kernels.segment.build_segments_flat`)
+    Docids arrive on the rows (the pass-3 docmap join) in any order:
+    postings are docid-sorted within each (term, block) here, and the
+    segment merge (:func:`kernels.segment.build_segments_flat`)
     restores global docid order per quantum, so no batch or partition
     has to cover a contiguous docid range. A null ``docid`` (a token
     row the docmap join found no row for) raises instead of silently
@@ -882,7 +747,7 @@ TOKENS_PER_SHUFFLE_PARTITION = 3_000_000
 
 def shuffle_partitions_for_tokens(coll_len: int, parallelism: int) -> int:
     """Partition count for the term-partitioned encode shuffle, sized
-    from the collection length (known exactly after the staging pass):
+    from the collection length (known exactly after pass 2):
     at least one per core, more when the per-partition pair budget
     demands it — the knob that keeps the big shuffle spill-free at
     10^12 tokens without taxing small corpora with empty tasks."""
@@ -1357,80 +1222,27 @@ def build_index(
     if stage_dir is None:
         stage_dir = tempfile.mkdtemp(prefix="atire_stage_")
 
-    # ---- pass 1: tokenize ONCE; token arrays go straight to parquet
-    # from the workers, only narrow key rows come back to Spark (the
-    # payload never crosses Arrow→JVM, never shuffles, never sorts)
-    import os as _os
-
-    tokens_dir = f"{stage_dir}/tokens"
-    _os.makedirs(tokens_dir, exist_ok=True)
-    # a reused stage_dir from a PRIOR build may hold more part files
-    # than this run's input has partitions; spark.read.parquet would
-    # silently mix the stale parts in (duplicate postings the key
-    # check cannot see — the keys table IS overwritten). The token
-    # side-write is per-build output, not a resume checkpoint (that is
-    # checkpoint.py's workdir), so clear the directory first.
-    for stale in _os.listdir(tokens_dir):
-        if stale.startswith(("part-", ".part-")):
-            _os.remove(f"{tokens_dir}/{stale}")
-    from pyspark import StorageLevel
-
-    registry: list = []
-    keys = _tokenize_sidewrite(
-        transcripts,
-        tokens_dir,
-        stemmer=stemmer,
-        stop_before_indexing=stop_before_indexing,
-        cjk_bigrams=cjk_bigrams,
-        cjk_segmenter=cjk_segmenter,
+    # ---- passes 1-3: tokenize once, docids over the narrow keys, docids
+    # joined back onto the side-written token arrays. The key partitions
+    # stay persisted until write_index: the docmap is a cheap stamp over
+    # them, recomputed by the pass-3 join and the docmap write.
+    tok_staged, docmap, n_total, coll_len, _n_keys, key_parts = (
+        _docid_token_rows(
+            spark,
+            transcripts,
+            stage_dir,
+            stemmer=stemmer,
+            stop_before_indexing=stop_before_indexing,
+            cjk_bigrams=cjk_bigrams,
+            cjk_segmenter=cjk_segmenter,
+        )
     )
-    # materialize pass 1 exactly once into the block cache (the rows
-    # are three scalar columns — tiny next to the side-written token
-    # payload; MEMORY_AND_DISK spills per executor at cluster scale):
-    # the range partitioner's sampling pass and the key shuffle then
-    # read the cache instead of re-running the tokenizer, with no
-    # staging-parquet write+read round-trip on the build's hot path
-    keys = keys.persist(StorageLevel.MEMORY_AND_DISK)
-    n_keys = keys.count()
-
-    # ---- pass 2: global docid assignment over the narrow keys (a
-    # three-scalar-column shuffle; repartitionByRange's sampling pass
-    # reads the key cache, not the tokenizer)
-    n_parts = max(spark.sparkContext.defaultParallelism, 4)
-    key_parts, docmap_rows, n_total, coll_len = _docids_from_keys(
-        keys, n_parts, n_keys
-    )
-    # key_parts (sorted narrow partitions) stays persisted: the docmap
-    # is a cheap vectorized stamp over it, recomputed lazily by its
-    # two consumers (the pass-3 docmap join and the final
-    # write_index docmap write) — cheaper than a stage-parquet
-    # write+read pair. The pass-1 cache is no longer needed once the
-    # sorted partitions are materialized.
-    keys.unpersist()
-    registry.append(key_parts)
-    docmap = docmap_rows
+    registry: list = [key_parts]
 
     if block_bits is None:
         block_bits = _adaptive_block_bits(
             max(n_total, 1), spark.sparkContext.defaultParallelism
         )
-
-    # ---- pass 3: join docids onto the side-written token arrays and
-    # build postings with the one stage-1 kernel. The docmap broadcasts
-    # up to docmap_broadcast_max (no payload shuffle at all); above it
-    # a plain shuffle join is the one payload shuffle any globally-keyed
-    # design pays. A left join: a token row without a docmap row
-    # reaches _stage1 with a null docid, and _stage1 raises on it.
-    if n_total == 0:
-        tokens = spark.createDataFrame([], TOKENIZED_SCHEMA)
-    else:
-        tokens = spark.read.parquet(tokens_dir)
-    dm_key = docmap.select("conv_id", "turn_idx", "docid")
-    if n_total <= docmap_broadcast_max(spark):
-        dm_key = F.broadcast(dm_key)
-    tok_staged = tokens.join(dm_key, ["conv_id", "turn_idx"], "left").select(
-        "docid", "doc_len", "terms", "occs"
-    )
     stage1 = _stage1(tok_staged, block_bits)
 
     keep = _cull_predicate(
@@ -1458,8 +1270,8 @@ def build_index(
             # the pre-cull values like the reference's ~length
             postings = postings.filter(keep)
             term_stats = term_stats.filter(keep)
-        # documents / collection_len / mean are literals — the staging
-        # pass already counted them per bucket, so the stats row costs
+        # documents / collection_len / mean are literals — pass 2
+        # already counted them per bucket, so the stats row costs
         # only the (cached) term_stats count, never a docmap re-scan
         stats = term_stats.agg(F.count("*").alias("unique_terms")).select(
             F.lit(n_total).cast("long").alias("documents"),
@@ -1492,7 +1304,7 @@ def build_index(
             tokenized=tok_staged,
         )
 
-    # the staging pass already counted N and the collection length —
+    # pass 2 already counted N and the collection length —
     # the quantizer needs no extra docmap scan; an all-empty corpus
     # has n_docs 0 and the quantizer never runs (no postings)
     n_docs = n_total
@@ -1546,6 +1358,31 @@ def build_index(
 
 
 # ---------------------------------------------------------------- storage
+def append_log_row(spark: SparkSession, path: str, schema: str, row: dict) -> None:
+    """Append one row, stamped ``ts`` = now (UTC), to the append-only
+    parquet log at ``path`` (the checkpointed build's ``_build_log``,
+    the stream's ``_ingest_log``). Columns missing from ``row`` are
+    NULL. The frame is built from an Arrow table, so it plans as a
+    LocalTableScan and the write starts no Python worker (a row of
+    Python objects is unpickled by one, ~0.5 s per row); ``schema``
+    (DDL, with ``ts timestamp``) pins every column's Spark type, so
+    rows written at any time read back as one table."""
+    from datetime import datetime, timezone
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [{**row, "ts": datetime.now(timezone.utc)}],
+        schema=to_arrow_schema(struct),
+    )
+    spark.createDataFrame(table, struct).coalesce(1).write.mode("append").parquet(
+        path
+    )
+
+
 def write_index(tables: IndexTables, path: str, mode: str = "overwrite") -> None:
     """Materialize to a directory of parquet tables.
 

@@ -11,8 +11,12 @@ crashed part is simply re-run. Here:
   parquet and a _build_log row (turns_parsed). A re-run skips chunks
   already logged ``ok`` — idempotent because chunk membership is a pure
   function of conv_id.
-- phase ``docids``: global docid assignment over the union of tokenized
-  chunks (stable (conv_id, turn_idx) order ⇒ independent of chunking).
+- phase ``docids``: global docid assignment over the key rows of the
+  union of tokenized chunks, by the batch build's own assigner
+  (:func:`atire_spark.build._docids_from_keys`: stable (conv_id,
+  turn_idx) order ⇒ independent of chunking, NULL and duplicate keys
+  rejected), then the batch build's docmap left join back onto the
+  non-empty tokenized rows.
 - phase ``postings``: term-hash chunks, each writing its segment rows +
   a log row (postings_emitted, bytes_compressed).
 - phase ``finalize``: stats table.
@@ -29,15 +33,16 @@ from __future__ import annotations
 
 import time
 import uuid
-from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from atire_spark.build import (
     IndexTables,
+    _docids_from_keys,
+    _join_docids,
     _stage1,
-    assign_docids,
+    append_log_row,
     quant_minmax_from_stage1,
     quantized_segments_from_stage1,
     segments_from_stage1,
@@ -68,16 +73,7 @@ def _done(log: DataFrame | None, phase: str) -> set[int]:
 
 
 def _append_log(spark: SparkSession, workdir: str, row: dict) -> None:
-    row = {
-        "turns_parsed": None,
-        "postings_emitted": None,
-        "bytes_compressed": None,
-        **row,
-        "ts": datetime.now(timezone.utc).replace(tzinfo=None),
-    }
-    spark.createDataFrame([row], LOG_SCHEMA).coalesce(1).write.mode("append").parquet(
-        f"{workdir}/_build_log"
-    )
+    append_log_row(spark, f"{workdir}/_build_log", LOG_SCHEMA, row)
 
 
 def build_index_checkpointed(
@@ -172,11 +168,19 @@ def build_index_checkpointed(
     if 0 not in _done(log, "docids"):
         t0 = time.monotonic()
         tokenized = spark.read.parquet(f"{workdir}/tokenized")
-        docs = assign_docids(tokenized)
-        docs.write.mode("overwrite").parquet(f"{workdir}/docs")
-        spark.read.parquet(f"{workdir}/docs").select(
-            "docid", "conv_id", "turn_idx", "doc_len"
-        ).write.mode("overwrite").parquet(f"{workdir}/docmap")
+        keys = tokenized.select("conv_id", "turn_idx", "doc_len")
+        key_parts, docmap, n_docs, _coll_len = _docids_from_keys(
+            keys, max(spark.sparkContext.defaultParallelism, 4), keys.count()
+        )
+        try:
+            _join_docids(
+                tokenized.filter(F.col("doc_len") > 0), docmap, n_docs
+            ).select("docid", "doc_len", "terms", "occs").write.mode(
+                "overwrite"
+            ).parquet(f"{workdir}/docs")
+            docmap.write.mode("overwrite").parquet(f"{workdir}/docmap")
+        finally:
+            key_parts.unpersist()
         _append_log(
             spark,
             workdir,

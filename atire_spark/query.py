@@ -159,6 +159,16 @@ def _local_result(spark: SparkSession, ranked: pd.DataFrame | None = None) -> Da
     )
 
 
+def _stats_row(**counts: int) -> pd.DataFrame:
+    """A ``return_stats`` scorer's per-partition stats row: NULL
+    ranking columns, the counts in their own side columns (see
+    :meth:`SearchEngine._ranked_with_stats`)."""
+    return pd.DataFrame(
+        {"query_id": [None], "docid": [None], "rsv_fixed": [None]}
+        | {c: [v] for c, v in counts.items()}
+    )
+
+
 def _rank_local(cand: pd.DataFrame, k: int) -> pd.DataFrame:
     """:meth:`SearchEngine._rank_topk` on the driver placement's
     candidates (at most k per query, see :func:`_grouped_topk`):
@@ -1498,10 +1508,25 @@ class SearchEngine:
         filter on the postings scan."""
         return self.postings.filter(F.col("term").isin(list(terms)))
 
-    def _collected(self, results: DataFrame) -> DataFrame:
-        """Materialize a result frame on the driver, so the cached
-        frames it reads can be released before it is returned."""
-        return self.spark.createDataFrame(results.toArrow())
+    def _ranked_with_stats(
+        self, cand: DataFrame, k: int, stats: dict[str, str]
+    ) -> tuple[DataFrame, dict[str, int]]:
+        """A ``return_stats`` scorer's result: its candidates (at most
+        k per (query, seg_group), plus one row per partition whose
+        ranking columns are NULL and whose side columns hold that
+        partition's counts) are collected once and ranked on the
+        driver by :func:`_rank_local`; ``stats`` maps each side column
+        to the name its sum is reported under."""
+        import pyarrow.compute as pc
+
+        table = cand.toArrow()
+        ranked = _rank_local(
+            table.filter(pc.is_valid(table["query_id"])).to_pandas(), k
+        )
+        return _local_result(self.spark, ranked), {
+            name: int(pc.sum(table[col]).as_py() or 0)
+            for col, name in stats.items()
+        }
 
     # ------------------------------------------------------------------
     def _rank_topk(self, accum: DataFrame, k: int) -> DataFrame:
@@ -2283,6 +2308,7 @@ class SearchEngine:
                             (row, weight)
                         )
             out = []
+            n_processed = n_total = 0
             for (qid, _sg), rows in per_q.items():
                 entries = []
                 total_q = 0
@@ -2419,46 +2445,28 @@ class SearchEngine:
                 out.append(
                     pd.DataFrame(
                         {
-                            "query_id": np.full(ids.size + 1, qid, dtype=np.int64),
-                            "docid": np.concatenate((ids, [-1])),
-                            "rsv_fixed": np.concatenate((vals, [0])),
-                            "pq": np.concatenate(
-                                (np.zeros(ids.size, np.int64), [processed])
-                            ),
-                            "tq": np.concatenate(
-                                (np.zeros(ids.size, np.int64), [total_q])
-                            ),
+                            "query_id": np.full(ids.size, qid, dtype=np.int64),
+                            "docid": ids,
+                            "rsv_fixed": vals,
                         }
                     )
                 )
+                n_processed += processed
+                n_total += total_q
             if out:
-                yield pd.concat(out)
+                yield pd.concat(out).assign(pq=0, tq=0)
+            if return_stats:
+                yield _stats_row(pq=n_processed, tq=n_total)
 
         cand = hits.repartition("seg_group").mapInPandas(
             part_fn,
             schema="query_id long, docid long, rsv_fixed long, pq long, tq long",
         )
-        results = self._rank_topk(
-            cand.filter(F.col("docid") >= 0).select("query_id", "docid", "rsv_fixed"),
-            k,
-        )
         if not return_stats:
-            return results
-        cand.persist()
-        try:
-            m = (
-                cand.filter(F.col("docid") < 0)
-                .agg(F.sum("pq").alias("pq"), F.sum("tq").alias("tq"))
-                .collect()[0]
-            )
-            results = self._collected(results)
-        finally:
-            cand.unpersist()
-        stats = {
-            "processed_quantums": int(m["pq"] or 0),
-            "total_quantums": int(m["tq"] or 0),
-        }
-        return results, stats
+            return self._rank_topk(cand, k)
+        return self._ranked_with_stats(
+            cand, k, {"pq": "processed_quantums", "tq": "total_quantums"}
+        )
 
     # ------------------------------------------------------------------
     @staticmethod
@@ -2525,11 +2533,8 @@ class SearchEngine:
         (θ₀ = 0 — exact either way), so rank identity holds
         unconditionally. Requires a quantized index (the reference
         likewise restricts quantum processing to baked-in scores,
-        atire_api.c:472-478). Query ids must be non-negative: the
-        scorer's per-partition stats rows use ``query_id -1``.
+        atire_api.c:472-478).
         """
-        if any(qid < 0 for qid, _ in queries):
-            raise ValueError("search_wand needs non-negative query ids")
         if not self.quantized:
             raise ValueError(
                 "block-max WAND needs a quantized index: max_impact "
@@ -2711,52 +2716,36 @@ class SearchEngine:
                     rsvs.append(tot)
                     # grow the local threshold off the completed docs
                     topk = np.sort(np.concatenate((topk, tot)))[-k:]
-            # marker row: per-partition (scored, total) pair counts for
-            # the stats aggregation (query_id -1 never ranks)
-            qids.append(np.array([-1], dtype=np.int64))
-            docs.append(np.array([n_decoded], dtype=np.int64))
-            rsvs.append(np.array([n_total_pairs], dtype=np.int64))
-            acc = pd.DataFrame(
-                {
-                    "query_id": np.concatenate(qids),
-                    "docid": np.concatenate(docs),
-                    "rsv_fixed": np.concatenate(rsvs),
-                }
-            )
-            outs = []
-            for qv, g in acc.groupby("query_id", sort=False):
-                if qv >= 0 and len(g) > k:
-                    order = np.lexsort(
-                        (-g["docid"].to_numpy(), -g["rsv_fixed"].to_numpy())
-                    )[:k]
-                    g = g.iloc[order]
-                outs.append(g)
-            yield pd.concat(outs)
+            if qids:
+                acc = pd.DataFrame(
+                    {
+                        "query_id": np.concatenate(qids),
+                        "docid": np.concatenate(docs),
+                        "rsv_fixed": np.concatenate(rsvs),
+                    }
+                )
+                outs = []
+                for _qv, g in acc.groupby("query_id", sort=False):
+                    if len(g) > k:
+                        order = np.lexsort(
+                            (-g["docid"].to_numpy(), -g["rsv_fixed"].to_numpy())
+                        )[:k]
+                        g = g.iloc[order]
+                    outs.append(g)
+                yield pd.concat(outs).assign(scored=0, total=0)
+            if return_stats:
+                yield _stats_row(scored=n_decoded, total=n_total_pairs)
 
         cand = hits.repartition("seg_group").mapInPandas(
-            part_fn, schema="query_id long, docid long, rsv_fixed long"
+            part_fn,
+            schema="query_id long, docid long, rsv_fixed long, scored long, "
+            "total long",
         )
-        results = self._rank_topk(cand.filter(F.col("query_id") >= 0), k)
         if not return_stats:
-            return results
-        cand.persist()
-        try:
-            m = (
-                cand.filter(F.col("query_id") < 0)
-                .agg(
-                    F.sum("docid").alias("s"),
-                    F.sum("rsv_fixed").alias("t"),
-                )
-                .collect()[0]
-            )
-            results = self._collected(results)
-        finally:
-            cand.unpersist()
-        stats = {
-            "segments_scored": int(m["s"] or 0),
-            "segments_total": int(m["t"] or 0),
-        }
-        return results, stats
+            return self._rank_topk(cand, k)
+        return self._ranked_with_stats(
+            cand, k, {"scored": "segments_scored", "total": "segments_total"}
+        )
 
     # ------------------------------------------------------------------
     def _kl_select(

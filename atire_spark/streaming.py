@@ -13,7 +13,10 @@ Semantics:
 - docids are assigned in ARRIVAL order: batches get consecutive docid
   ranges, rows within a batch ordered by (conv_id, turn_idx). This is
   the reference's own docid rule — input order (atire/index.c:507) —
-  with the stream as the input.
+  with the stream as the input. A batch runs the batch build's own
+  passes 1-3 (:func:`atire_spark.build._docid_token_rows`: one
+  tokenize, one key sort, one docmap join), and its docids are then
+  offset by the documents already indexed, a plain column add.
 - ``block_bits`` is pinned at stream start so every batch's docid
   blocks land in the same segment-group geometry.
 - per-batch term stats land in a small ``term_stats`` table;
@@ -39,11 +42,10 @@ from pyspark.sql import functions as F
 
 from atire_spark.build import (
     IndexTables,
-    _range_bounds,
+    _docid_token_rows,
     _stage1,
-    _stage_sorted,
+    append_log_row,
     segments_from_stage1,
-    tokenize_stage,
 )
 
 STREAM_BLOCK_BITS = 16  # pinned geometry across batches
@@ -69,24 +71,10 @@ def _write_state(index_dir: str, state: dict) -> None:
     os.replace(tmp, p)
 
 
-def _append_ingest_log(
-    spark: SparkSession, index_dir: str, row: dict
-) -> None:
-    """Per-epoch lineage/metrics row (append-only parquet) — the
-    streaming counterpart of the checkpointed build's _build_log
-    (turns parsed, postings emitted, bytes compressed per partition of
-    work; here the partition IS the epoch)."""
-    import datetime as _dt
-
-    row = {
-        **row,
-        "ts": _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None),
-    }
-    spark.createDataFrame(
-        [row],
-        "epoch long, docs_added long, turns_seen long, postings_rows long,"
-        " postings_bytes long, wall_sec double, ts timestamp",
-    ).coalesce(1).write.mode("append").parquet(f"{index_dir}/_ingest_log")
+INGEST_LOG_SCHEMA = (
+    "epoch long, docs_added long, turns_seen long, postings_rows long,"
+    " postings_bytes long, wall_sec double, ts timestamp"
+)
 
 
 def read_ingest_log(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -102,11 +90,16 @@ def append_batch(
     stemmer: str | None = None,
     stop_before_indexing: str | None = None,
 ) -> int:
-    """Index one micro-batch: tokenize → docids continuing from the
-    stream state → segment rows appended. Returns docs added.
+    """Index one micro-batch: the batch build's passes 1-3 → docids
+    offset past the stream state → segment rows appended. Returns docs
+    added.
 
     The same function body serves foreachBatch and direct incremental
     appends (the reference's multi-part + merge recipe run by hand).
+    Every epoch, committed or empty, writes one ``_ingest_log`` row
+    (the checkpointed build's ``_build_log`` counterpart; here the
+    partition of work IS the epoch) and releases every frame it
+    persisted.
     """
     import time as _time
 
@@ -121,61 +114,46 @@ def append_batch(
         )
     base = int(state["n_docs"])
 
-    tokenized = tokenize_stage(
-        batch, stemmer=stemmer, stop_before_indexing=stop_before_indexing
-    )
-    n_ranges = max(spark.sparkContext.defaultParallelism, 4)
-    bounds, n_turns = _range_bounds(batch, n_ranges)
     rows = nbytes = 0
-    # the staged batch is read by every write below and by nothing
-    # after them
+    # the side-written token arrays are read by every write below and
+    # by nothing after them
     with tempfile.TemporaryDirectory(
         prefix="atire_stream_stage_", ignore_cleanup_errors=True
     ) as stage_dir:
-        staged, offsets, n_new, _coll_len = _stage_sorted(
-            tokenized, stage_dir, num_ranges=n_ranges, bounds=bounds
+        docs, docmap, n_new, _coll_len, n_turns, key_parts = _docid_token_rows(
+            spark, batch, stage_dir, stemmer, stop_before_indexing
         )
-        if n_new:
-            # this batch's docids continue past everything already
-            # indexed; one frame feeds both the docmap and stage 1. The
-            # per-bucket offsets ride in the plan as a literal map: a
-            # broadcast join of a driver-made offsets frame would cost
-            # one Spark job in each query that reads the frame
-            offset = F.create_map(
-                *[
-                    c
-                    for pid, off in sorted(offsets.items())
-                    for c in (F.lit(pid), F.lit(base + off).cast("long"))
-                ]
-            )
-            docs = staged.select(
-                (offset[F.col("pid")] + F.col("local_idx")).cast("long").alias("docid"),
-                "conv_id",
-                "turn_idx",
-                "doc_len",
-                "terms",
-                "occs",
-            )
-            registry: list = []
-            postings, term_stats = segments_from_stage1(
-                _stage1(docs, STREAM_BLOCK_BITS), 1, registry=registry
-            )
-            seg_cols = [c for c in postings.columns if c not in ("df", "cf")]
-            postings.select(*seg_cols).write.mode("append").parquet(
-                f"{index_dir}/segments"
-            )
-            term_stats.write.mode("append").parquet(f"{index_dir}/term_stats")
-            docs.select("docid", "conv_id", "turn_idx", "doc_len").write.mode(
-                "append"
-            ).parquet(f"{index_dir}/docmap")
-            # per-epoch metrics over the persisted stage (one extra agg
-            # job, no re-tokenize): segment rows emitted + compressed
-            # posting bytes
-            m = postings.agg(
-                F.count("*").alias("rows"),
-                F.sum(F.length("postings")).alias("bytes"),
-            ).collect()[0]
-            rows, nbytes = int(m["rows"]), int(m["bytes"] or 0)
+        registry: list = [key_parts]
+        try:
+            if n_new:
+                # this batch's docids continue past everything already
+                # indexed
+                docid = (F.col("docid") + base).alias("docid")
+                postings, term_stats = segments_from_stage1(
+                    _stage1(
+                        docs.select(docid, "doc_len", "terms", "occs"),
+                        STREAM_BLOCK_BITS,
+                    ),
+                    1,
+                    registry=registry,
+                )
+                seg_cols = [c for c in postings.columns if c not in ("df", "cf")]
+                postings.select(*seg_cols).write.mode("append").parquet(
+                    f"{index_dir}/segments"
+                )
+                term_stats.write.mode("append").parquet(f"{index_dir}/term_stats")
+                docmap.select(docid, "conv_id", "turn_idx", "doc_len").write.mode(
+                    "append"
+                ).parquet(f"{index_dir}/docmap")
+                # per-epoch metrics over the persisted segments (one extra
+                # agg job, no re-tokenize): segment rows emitted +
+                # compressed posting bytes
+                m = postings.agg(
+                    F.count("*").alias("rows"),
+                    F.sum(F.length("postings")).alias("bytes"),
+                ).collect()[0]
+                rows, nbytes = int(m["rows"]), int(m["bytes"] or 0)
+        finally:
             for df_ in registry:
                 df_.unpersist()
     _write_state(
@@ -186,9 +164,10 @@ def append_batch(
             "stemmer": stemmer or "",
         },
     )
-    _append_ingest_log(
+    append_log_row(
         spark,
-        index_dir,
+        f"{index_dir}/_ingest_log",
+        INGEST_LOG_SCHEMA,
         {
             "epoch": int(epoch_id),
             "docs_added": int(n_new),

@@ -168,10 +168,16 @@ def _tokenized_frame(spark, rows):
     return spark.createDataFrame(pdf, schema=B.TOKENIZED_SCHEMA)
 
 
-def test_classic_path_duplicate_check_sees_empty_rows(spark, tmp_path):
-    """The staged (streaming-ingest) path's duplicate-key check must
-    run BEFORE the doc_len > 0 filter: a key duplicated between an
-    empty and a non-empty turn is just as order-unstable (ADVICE r4)."""
+def _docids(tok):
+    """Pass 2 over the key columns of a tokenized frame."""
+    keys = tok.select("conv_id", "turn_idx", "doc_len")
+    return B._docids_from_keys(keys, 4, keys.count())
+
+
+def test_classic_path_duplicate_check_sees_empty_rows(spark):
+    """The docid assigner's duplicate-key check runs BEFORE the
+    doc_len > 0 filter: a key duplicated between an empty and a
+    non-empty turn is just as order-unstable (ADVICE r4)."""
     import pytest
 
     tok = _tokenized_frame(
@@ -183,10 +189,10 @@ def test_classic_path_duplicate_check_sees_empty_rows(spark, tmp_path):
         ],
     )
     with pytest.raises(Exception, match="duplicate transcripts key"):
-        B._stage_sorted(tok, str(tmp_path / "st"))[0].collect()
+        _docids(tok)
 
 
-def test_classic_path_null_key_check_is_exhaustive(spark, tmp_path):
+def test_classic_path_null_key_check_is_exhaustive(spark):
     """A NULL-keyed row that tokenizes to NOTHING must still be
     rejected deterministically — acceptance can never depend on
     whether the range-bounds sampling pass happened to draw it
@@ -202,13 +208,13 @@ def test_classic_path_null_key_check_is_exhaustive(spark, tmp_path):
         ],
     )
     with pytest.raises(Exception, match="non-null key"):
-        B._stage_sorted(tok, str(tmp_path / "st"))[0].collect()
+        _docids(tok)
 
 
-def test_classic_path_empty_rows_do_not_shift_docids(spark, tmp_path):
-    """Moving the doc_len filter inside the stamp must leave docid
-    assignment unchanged: empty rows are dup-checked, then dropped
-    without consuming a docid or a local_idx slot."""
+def test_classic_path_empty_rows_do_not_shift_docids(spark):
+    """Empty rows are dup-checked, then dropped without consuming a
+    docid: docids are dense over the doc_len > 0 survivors in
+    (conv_id, turn_idx) order."""
     tok = _tokenized_frame(
         spark,
         [
@@ -219,15 +225,11 @@ def test_classic_path_empty_rows_do_not_shift_docids(spark, tmp_path):
             ("c2", 1, 1, ["charlie"]),
         ],
     )
-    staged, offsets, n, coll_len = B._stage_sorted(tok, str(tmp_path / "st"))
+    parts, docmap, n, coll_len = _docids(tok)
     assert n == 3 and coll_len == 3
     got = sorted(
-        (r["conv_id"], int(r["turn_idx"]), int(r["local_idx"]))
-        for r in staged.collect()
+        (int(r["docid"]), r["conv_id"], int(r["turn_idx"]))
+        for r in docmap.collect()
     )
-    # dense per-bucket local_idx over survivors only
-    pids = {r["conv_id"]: int(r["pid"]) for r in staged.collect()}
-    docids = sorted(
-        offsets[pids[c]] + i for c, _, i in got
-    )
-    assert docids == [0, 1, 2]
+    parts.unpersist()
+    assert got == [(0, "c0", 0), (1, "c1", 0), (2, "c2", 1)]

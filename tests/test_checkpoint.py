@@ -149,3 +149,35 @@ def test_resume_with_different_flags_rejected(spark, workdir):
             spark, tdf, workdir, n_chunks=2, n_term_chunks=2, block_bits=5,
             blocks_per_seg=2, quantize_bits=8,
         )
+
+
+@pytest.mark.parametrize(
+    "conv_ids,turn_idx,match",
+    [
+        (["c0", "c1", "c1"], [0, 3, 3], "uniquely identify"),
+        (["c0", None, "c1"], [0, 0, 0], "non-null key"),
+    ],
+)
+def test_checkpointed_build_rejects_bad_keys(
+    spark, workdir, conv_ids, turn_idx, match
+):
+    """The checkpointed build assigns docids with the batch build's
+    assigner, so a duplicate (conv_id, turn_idx) key and a NULL key
+    each fail it, as they fail build_index, and the failure releases
+    the key partitions it persisted."""
+    import pandas as pd
+
+    pdf = pd.DataFrame(
+        {
+            "conv_id": conv_ids,
+            "turn_idx": turn_idx,
+            "text": ["alpha bravo", "bravo one", "alpha charlie"],
+        }
+    )
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(Exception, match=match):
+        build_index_checkpointed(
+            spark, spark.createDataFrame(pdf), workdir, n_chunks=2,
+            n_term_chunks=2, block_bits=5, blocks_per_seg=2,
+        )
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before

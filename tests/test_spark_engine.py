@@ -873,11 +873,25 @@ class TestBlockMaxWand:
         with pytest.raises(ValueError, match="quantized"):
             small_engine.search_wand([(1, "alpha")])
 
-    def test_negative_query_id_rejected(self, wand_engine):
-        """The scorer's stats rows use query_id -1, so a negative query
-        id is refused instead of silently dropped from the results."""
-        with pytest.raises(ValueError, match="non-negative"):
-            wand_engine.search_wand([(1, "alpha"), (-1, "bravo")])
+    @pytest.mark.parametrize("return_stats", [False, True])
+    def test_negative_query_id_ranks_as_search_batch(
+        self, wand_engine, return_stats
+    ):
+        """The scorer's stats travel in side columns, not in a reserved
+        query id: a negative query id ranks exactly as in search_batch,
+        with or without stats."""
+        batch = [(1, "alpha"), (-1, "00001 00002"), (-7, "alpha 00003")]
+        got = wand_engine.search_wand(batch, k=5, return_stats=return_stats)
+        if return_stats:
+            got, stats = got
+            assert 0 < stats["segments_scored"] <= stats["segments_total"]
+        cols = ["query_id", "rank", "docid", "rsv_fixed"]
+        exact = wand_engine.search_batch(batch, k=5).toPandas()
+        assert set(exact.query_id) == {1, -1, -7}
+        pd.testing.assert_frame_equal(
+            got.toPandas()[cols].reset_index(drop=True),
+            exact[cols].reset_index(drop=True),
+        )
 
     def test_return_stats_releases_cached_candidates(self, spark, wand_engine):
         """search_wand and search_qaat cache their candidates for the

@@ -120,12 +120,20 @@ def test_ingest_log_counts_turns_seen(spark, stream_dirs):
     empty = pd.DataFrame({"conv_id": ["e0"], "turn_idx": [0], "text": [""]})
     assert append_batch(spark, spark.createDataFrame(BATCH2), index_dir, 0) == 2
     assert append_batch(spark, spark.createDataFrame(empty), index_dir, 1) == 0
-    log = read_ingest_log(spark, index_dir).orderBy("epoch").collect()
+    log_df = read_ingest_log(spark, index_dir)
+    log = log_df.orderBy("epoch").collect()
     assert [(r["epoch"], r["turns_seen"], r["docs_added"]) for r in log] == [
         (0, 3, 2),
         (1, 1, 0),
     ]
     assert log[1]["postings_rows"] == 0 and log[1]["postings_bytes"] == 0
+    # every column keeps its Spark type across appends; ts stays a
+    # session-zoned timestamp, not timestamp_ntz
+    assert log_df.schema.simpleString() == (
+        "struct<epoch:bigint,docs_added:bigint,turns_seen:bigint,"
+        "postings_rows:bigint,postings_bytes:bigint,wall_sec:double,"
+        "ts:timestamp>"
+    )
 
 
 def test_epoch_replay_is_idempotent(spark, stream_dirs):
@@ -153,17 +161,22 @@ def test_epoch_replay_is_idempotent(spark, stream_dirs):
 
 def test_appends_leave_no_staging_dirs(spark, stream_dirs, tmp_path, monkeypatch):
     """append_batch removes the directory it stages a batch in once the
-    epoch is written, also for a batch that adds no document."""
+    epoch is written, and releases every frame it persisted (the key
+    partitions of its docid sort, the encoded segments), also for a
+    batch that adds no document."""
     from atire_spark.streaming import append_batch
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     index_dir, _ = stream_dirs
     os.makedirs(index_dir, exist_ok=True)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
     empty = pd.DataFrame({"conv_id": ["e0"], "turn_idx": [0], "text": [""]})
     assert append_batch(spark, spark.createDataFrame(BATCH1), index_dir, 0) == 3
     assert append_batch(spark, spark.createDataFrame(empty), index_dir, 1) == 0
     assert append_batch(spark, spark.createDataFrame(BATCH2), index_dir, 2) == 2
     assert not glob.glob(os.path.join(tempfile.gettempdir(), "atire_stream_stage_*"))
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_compacted_stream_index_scores_identical(spark, stream_dirs):
